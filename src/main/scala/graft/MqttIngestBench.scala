@@ -18,7 +18,7 @@ import graft.sources.{MqttBroker, MqttClient, PartitionedMqttBus}
   * Protocol honesty: producers publish at QoS 1 (block on the broker's
   * PUBACK), consumers subscribe at QoS 1 (the broker retransmits until
   * the lane PUBACKs), and the terminal assertion is landed == total
-  * EXACTLY — a duplicate from a retransmit race or a bridge drop fails
+  * EXACTLY — a duplicate from a retransmit race or a lane-log drop fails
   * the run rather than inflating the rate. EIGHT producer connections
   * are used at every lane count (each QoS 1 publish blocks on its
   * PUBACK, so one producer tops out near the per-connection
@@ -91,7 +91,7 @@ object MqttIngestBench {
         s"lanes=$lanes: landed $got != published $total " +
           s"(dropped=${bus.dropped}) — dup or loss, run is invalid")
       require(bus.dropped == 0,
-        s"lanes=$lanes: ${bus.dropped} bridge drops")
+        s"lanes=$lanes: ${bus.dropped} lane-log drops")
       (dt, total / dt)
     } finally {
       pubs.foreach(p => try p.disconnect() catch { case _: Throwable => () })

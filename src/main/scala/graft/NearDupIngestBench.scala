@@ -24,7 +24,7 @@ import graft.streaming.NearDupStream
   * scale with lanes, or only the raw socket path?" table MqttIngestBench
   * could not answer. Honesty rails: the source-row count must equal the
   * published count EXACTLY (listener-accumulated numInputRows — a
-  * bridge drop fails the run), zero bridge drops, and the end-to-end
+  * lane-log drop fails the run), zero lane-log drops, and the end-to-end
   * pair SET received over MQTT must equal the batch q_dedup_pairs
   * relation on the same corpus (at-least-once duplicates collapse by
   * set identity) — so a faster configuration can never buy its rate
@@ -132,7 +132,7 @@ object NearDupIngestBench {
         require(landed.get() == nDocs,
           s"lanes=$lanes: landed ${landed.get()} != published $nDocs " +
             s"(dropped=${bus.dropped}) — loss or dup, run is invalid")
-        require(bus.dropped == 0, s"lanes=$lanes: bridge drops")
+        require(bus.dropped == 0, s"lanes=$lanes: lane-log drops")
         // drain the tail: wait until the received pair set is stable
         var last = -1
         while (got.size != last) { last = got.size; Thread.sleep(1500) }

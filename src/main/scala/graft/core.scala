@@ -14,11 +14,6 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // every query path loads at least one table, so this is the choke
-    // point that guarantees the engine's native functions (sum128 under
-    // Det.dsum, pq_dists, …) resolve on whatever session the harness
-    // hands us; idempotent and O(registered functions)
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     if (name == "events") {
       // events.ts has shipped as both parquet TIMESTAMP(NANOS) and
       // TIMESTAMP(MICROS) across driver testdata generations. Nanos are

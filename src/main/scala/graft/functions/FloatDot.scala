@@ -66,11 +66,9 @@ case class FloatDot(left: Expression, right: Expression)
       newRight: Expression): Expression = copy(newLeft, newRight)
 }
 
-/** Engine function catalog: registration for custom expressions, both as
-  * a [[org.apache.spark.sql.SparkSessionExtensions]] installer (cluster
-  * deployment: `spark.sql.extensions=graft.functions.GraftExtensions`)
-  * and as an idempotent per-session registrar (works on any session the
-  * harness hands us). */
+/** Engine function catalog: the custom expressions every session gets
+  * through [[GraftFunctionsProvider]], plus an idempotent per-session
+  * registrar. */
 object GraftFunctions {
   val all: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] = Seq(

@@ -141,7 +141,7 @@ case class Sum128(child: Expression, scaleExpr: Expression)
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(newChildren(0))
+    copy(newChildren(0), newChildren(1))
 }
 
 /** (hi, lo) 128-bit two's-complement pair → exact DECIMAL(38, scale).

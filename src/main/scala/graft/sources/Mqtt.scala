@@ -3,8 +3,7 @@ package graft.sources
 import java.io.{EOFException, IOException, InputStream, OutputStream}
 import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch,
-  LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.concurrent.TrieMap
@@ -53,9 +52,10 @@ import graft.plans.TopicMatch
   * Scale note: this broker is test/dev infrastructure — the production
   * deployment points [[MqttBus]] (or a Kafka source, same seam) at a
   * real broker. What must scale is the SPARK side: the connector
-  * surfaces one line-delimited JSON stream whose parse/projection is
-  * the proven [[Sources.SocketJsonBus]] plan, partitioned and
-  * watermarked downstream exactly like every other bus adapter.
+  * surfaces one stream of JSON lines, one input partition per lane
+  * ([[MqttLaneSource]]), whose parse/projection is the proven
+  * [[Sources.SocketJsonBus]] plan, partitioned and watermarked
+  * downstream exactly like every other bus adapter.
   */
 object Mqtt {
 
@@ -550,94 +550,77 @@ object MqttSink {
       }
 }
 
-/** The R1 connector: subscribe to an MQTT topic filter, surface the
-  * payloads as the canonical event stream. The client pumps each
+/** The R1 connector: subscribe to MQTT topic filters, surface the
+  * payloads as the canonical event stream. Each lane is one broker
+  * connection on one filter; its client callback appends every raw
   * payload (one JSON event object, [[Sources.SocketJsonBus.wireSchema]]
-  * on the wire) through a loopback line bridge into Spark's built-in
-  * `socket` source, so the Spark-side plan is EXACTLY the proven
-  * [[Sources.SocketJsonBus]] parse — public source API only, no
-  * internal Spark classes in the data path.
+  * on the wire) to the lane's [[LaneLog]] on the driver, and
+  * [[MqttLaneSource]] reads all lanes as ONE stream: per micro-batch,
+  * one input partition per non-empty lane, carrying that lane's new
+  * payloads as one newline-joined byte block. The Spark-side plan is
+  * EXACTLY the proven [[Sources.SocketJsonBus.parse]] — public
+  * connector API only, no internal Spark classes in the data path.
   *
   * Durability matches the socket connector's tier: at-most-once into
-  * Spark (the bridge buffer is bounded; a crashed driver re-subscribes
-  * fresh). The broker-side QoS 1 still guarantees the bridge RECEIVES
-  * each event at least once. A durable variant is the same client
-  * writing files for [[Sources.FileReplayBus]] — same seam. */
-final class MqttBus(host: String, port: Int, filter: String,
-    clientId: String = "graft-bus") extends Sources.BusSource
+  * Spark. The lane logs live in driver memory, bounded at
+  * [[LaneLog.Cap]] lines per lane (overflow drops the newest line and
+  * counts it in `dropped`), and a crashed driver re-subscribes fresh: a
+  * query restarted on an old checkpoint reads the fresh bus from its
+  * current end. The broker-side QoS 1 still guarantees each lane
+  * RECEIVES every event at least once. A durable variant is the same
+  * client writing files for [[Sources.FileReplayBus]] — same seam. One
+  * streaming query per bus: committing a micro-batch trims the logs. */
+final class MqttBus private[sources] (host: String, port: Int,
+    lanes: Seq[(String, String)]) extends Sources.BusSource
     with AutoCloseable {
 
-  /** Bounded hand-off: bus payloads queue here until the Spark socket
-    * source connects and drains. 128k lines ≈ tens of MB worst case —
-    * a dev/live-tap buffer, not a durability log; overflow drops the
-    * NEWEST line and counts it (visible, never silent). */
-  private val queue = new LinkedBlockingQueue[String](131072)
-  @volatile private var droppedCount = 0L
-  def dropped: Long = droppedCount
+  /** One lane: `filter` on one connection named `clientId`. */
+  def this(host: String, port: Int, filter: String,
+      clientId: String = "graft-bus") =
+    this(host, port, Seq((filter, clientId)))
 
-  private val bridge =
-    new ServerSocket(0, 1, InetAddress.getLoopbackAddress)
-  @volatile private var running = true
-  @volatile private var client: MqttClient = null
+  private val logs = lanes.map(_ => new LaneLog).toIndexedSeq
+  private val id = MqttLaneSource.register(logs)
+  private var clients = Seq.empty[MqttClient]
 
-  private val pump = new Thread(() => {
-    while (running) {
-      try {
-        val consumer = bridge.accept()
-        val out = consumer.getOutputStream
-        try {
-          while (running) {
-            val line = queue.poll(100, TimeUnit.MILLISECONDS)
-            if (line != null) {
-              out.write(line.getBytes(UTF_8)); out.write('\n'); out.flush()
-            }
-          }
-        } catch { case _: IOException => () } // consumer went away
-        finally {
-          try consumer.close() catch { case _: Throwable => () }
+  /** Payloads dropped on lane-log overflow (0 in a healthy run). */
+  def dropped: Long = logs.map(_.dropped).sum
+
+  def subscribe(spark: SparkSession): DataFrame = {
+    synchronized {
+      if (clients.isEmpty)
+        clients = lanes.zip(logs).map { case ((filter, clientId), log) =>
+          val c = new MqttClient(host, port, clientId).connect()
+          c.subscribe(filter, qos = 1)((_, payload) => log.append(payload))
+          c
         }
-      } catch { case _: Throwable => () } // accept raced close()
     }
-  }, "graft-mqtt-bridge-pump")
-  pump.setDaemon(true)
-
-  def subscribe(spark: SparkSession): DataFrame = synchronized {
-    if (client == null) {
-      pump.start()
-      client = new MqttClient(host, port, clientId).connect()
-      client.subscribe(filter, qos = 1) { (_, payload) =>
-        if (!queue.offer(new String(payload, UTF_8))) droppedCount += 1
-      }
-    }
-    Sources.SocketJsonBus("127.0.0.1", bridge.getLocalPort)
-      .subscribe(spark)
+    Sources.SocketJsonBus.parse(MqttLaneSource.stream(spark, id))
   }
 
-  def close(): Unit = {
-    running = false
-    if (client != null) client.disconnect()
-    try bridge.close() catch { case _: Throwable => () }
+  def close(): Unit = synchronized {
+    clients.foreach(_.disconnect())
+    MqttLaneSource.unregister(id)
   }
 }
 
 /** Partitioned MQTT ingest (r10 verdict item #2): N INDEPENDENT broker
-  * connections — one per topic-partition lane `prefix/p<i>/#` — each a
-  * full [[MqttBus]] (own TCP connection, own bridge socket, own Spark
-  * socket reader), unioned into ONE canonical event stream. This is the
-  * Kafka-partition shape expressed in MQTT terms: producers shard a
-  * topic by key (`topicFor`), consumers subscribe one lane per
-  * connection, and ingest parallelism scales with lane count because
-  * every serialization point of the single-connection path — the
-  * broker-side per-connection socket write, the client reader thread,
-  * the PUBACK round-trip, the bridge pump — is replicated per lane.
-  * MqttIngestBench measures the scaling curve; StreamingParitySpec
-  * proves the unioned stream reaches the same tumbling results as the
-  * batch reconstruction (no event lost or duplicated across lanes).
+  * connections — one per topic-partition lane `prefix/p<i>/#` — read as
+  * ONE canonical event stream whose micro-batches have one input
+  * partition per lane ([[MqttBus]]). This is the Kafka-partition shape
+  * expressed in MQTT terms: producers shard a topic by key
+  * (`topicFor`), consumers subscribe one lane per connection, and
+  * ingest parallelism scales with lane count because every
+  * serialization point of the single-connection path — the broker-side
+  * per-connection socket write, the client reader thread, the PUBACK
+  * round-trip — is replicated per lane. MqttIngestBench measures the
+  * scaling curve; StreamingParitySpec proves the stream reaches the
+  * same tumbling results as the batch reconstruction (no event lost or
+  * duplicated across lanes).
   *
-  * At 100 TB the union is N narrow sources feeding the same downstream
-  * shuffle — Spark plans each socket reader as its own partition, so
-  * the parse/watermark stages parallelize exactly like a multi-
-  * partition Kafka topic.
+  * At 100 TB the lanes are the input partitions of one scan feeding the
+  * downstream shuffle, so the parse/watermark stages parallelize
+  * exactly like a multi-partition Kafka topic.
   */
 final class PartitionedMqttBus(host: String, port: Int,
     topicPrefix: String, partitions: Int,
@@ -645,16 +628,15 @@ final class PartitionedMqttBus(host: String, port: Int,
     extends Sources.BusSource with AutoCloseable {
   require(partitions >= 1, "partitions must be >= 1")
 
-  val lanes: Seq[MqttBus] = (0 until partitions).map(i =>
-    new MqttBus(host, port, s"$topicPrefix/p$i/#", s"$clientIdPrefix-$i"))
+  private val bus = new MqttBus(host, port, (0 until partitions).map(i =>
+    (s"$topicPrefix/p$i/#", s"$clientIdPrefix-$i")))
 
-  /** Total bridge-overflow drops across lanes (0 in a healthy run). */
-  def dropped: Long = lanes.map(_.dropped).sum
+  /** Total lane-log overflow drops across lanes (0 in a healthy run). */
+  def dropped: Long = bus.dropped
 
-  def subscribe(spark: SparkSession): DataFrame =
-    lanes.map(_.subscribe(spark)).reduce(_ union _)
+  def subscribe(spark: SparkSession): DataFrame = bus.subscribe(spark)
 
-  def close(): Unit = lanes.foreach(_.close())
+  def close(): Unit = bus.close()
 }
 
 object PartitionedMqttBus {

@@ -97,7 +97,11 @@ object Sources {
     * pipeline off [[RateBus]], off [[SocketJsonBus]] (raw TCP), and
     * since r10 off [[graft.sources.MqttBus]] — a REAL hand-rolled
     * MQTT 3.1.1 broker-protocol subscription (sources/Mqtt.scala), the
-    * reference's actual bus protocol. */
+    * reference's actual bus protocol. A connector is free in how it
+    * feeds Spark: MqttBus reads its lanes through its own streaming
+    * source ([[graft.sources.MqttLaneSource]], one input partition per
+    * lane) and ends in the same [[SocketJsonBus.parse]] as the raw-TCP
+    * connector. */
   trait BusSource {
     def subscribe(spark: SparkSession): DataFrame
   }

@@ -23,7 +23,7 @@ import graft.sources.{Mqtt, MqttBroker, MqttBus, MqttClient}
   *  - Broker restart under an active [[MqttBus]] subscription: the
   *    documented at-most-once tier — already-delivered events stay in
   *    the sink, the Spark query survives, nothing is silently dropped
-  *    from the bridge, and a FRESH subscription on the new broker
+  *    from the lane log, and a FRESH subscription on the new broker
   *    resumes delivery (re-subscribe IS the recovery path,
   *    Mqtt.scala MqttBus scaladoc).
   *  - Registry snapshot corruption: a snapshot row that fails template
@@ -134,7 +134,7 @@ class FailureInjectionSpec extends SparkSpec {
       // KILL the broker under the live subscription
       broker1.stop()
       Thread.sleep(500)
-      // contract: the query survives, the count is intact, the bridge
+      // contract: the query survives, the count is intact, the lane log
       // dropped nothing (loss at this tier is the dead TCP connection,
       // which is VISIBLE — the connector does not fake durability)
       assert(q1.isActive, "query must survive a broker death")

@@ -227,9 +227,13 @@ class MqttSpec extends AnyFunSuite {
         if ((h >> 4) == Mqtt.PUBLISH) {
           val (topic, o) = Mqtt.readStr(body, 0)
           val pid = Mqtt.readU16(body, o)
-          live = Some((topic,
-            new String(body, o + 2, body.length - o - 2, UTF_8),
-            (h & 0x01) != 0))
+          // a retained delivery acked above can still come back as a
+          // DUP retransmission (RETAIN=1) if the broker's retransmit
+          // timer fired before the ack landed: ack it, skip it
+          if ((h & 0x08) == 0 && topic == "graft/ann/t3")
+            live = Some((topic,
+              new String(body, o + 2, body.length - o - 2, UTF_8),
+              (h & 0x01) != 0))
           out.write(Mqtt.packet(Mqtt.PUBACK << 4,
             Array[Byte]((pid >> 8).toByte, (pid & 0xff).toByte)))
           out.flush()

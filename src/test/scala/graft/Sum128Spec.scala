@@ -98,4 +98,20 @@ class Sum128Spec extends SparkSpec {
         java.lang.Double.doubleToLongBits(r.getDouble(4)), s"davg: $r")
     }
   }
+
+  test("withNewChildren replaces both children (the input and the scale)") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val old = graft.functions.Sum128(Literal(1L), Literal(4))
+    val fresh = old.withNewChildren(Seq(Literal(2L), Literal(8)))
+    assert(fresh == graft.functions.Sum128(Literal(2L), Literal(8)))
+  }
+
+  test("sum128 resolves on a fresh session that never registered it") {
+    // newSession() starts from the builtin registry plus the session
+    // extensions, so only the service-loaded provider can supply it
+    val fresh = spark.newSession()
+    val r = fresh.range(3).select(
+      Det.dsum(col("id").cast("double")).as("s")).head()
+    assert(r.getDouble(0) == 3.0)
+  }
 }
