@@ -289,9 +289,10 @@ object Bench {
     // the production-appropriate defaults (4 MB file open cost, 1 MB
     // AQE min partition size, 128 MB split size), which caps scan and
     // reduce parallelism at any core count on MB-scale inputs — the r13
-    // scaling-check blind spot. The r14 sf1 core-scaling demonstration
-    // (OPTIMIZATION_r14.md) sets them to fixture-proportional values;
-    // at 100 TB the defaults are already right and these stay unset.
+    // scaling-check blind spot. All five are unset in every committed
+    // run; setting them to fixture-proportional values for an sf1
+    // core-scaling proof is the carried "Core-scaling proof" item in
+    // ROADMAP.md. At 100 TB the defaults are already right.
     Seq(
       "SPARK_GRAFT_MAX_PART_B" -> "spark.sql.files.maxPartitionBytes",
       "SPARK_GRAFT_OPEN_COST_B" -> "spark.sql.files.openCostInBytes",

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal, UnscaledValue}
@@ -67,8 +66,8 @@ case class FloatDot(left: Expression, right: Expression)
 }
 
 /** Engine function catalog: the custom expressions every session gets
-  * through [[GraftFunctionsProvider]], plus an idempotent per-session
-  * registrar. */
+  * through [[GraftFunctionsProvider]]. A new native function is one entry
+  * here; nothing registers functions per call. */
 object GraftFunctions {
   val all: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] = Seq(
@@ -77,10 +76,12 @@ object GraftFunctions {
       (children: Seq[Expression]) => FloatDot(children(0), children(1))),
     (new FunctionIdentifier("decimal_dot"),
       new ExpressionInfo(classOf[DecimalDot].getName, "decimal_dot"),
-      (children: Seq[Expression]) => DecimalDot(children(0), children(1))),
+      (children: Seq[Expression]) =>
+        DecimalDot(children(0), children(1), 10)),
     (new FunctionIdentifier("decimal_wdot"),
-      new ExpressionInfo(classOf[DecimalWDot].getName, "decimal_wdot"),
-      (children: Seq[Expression]) => DecimalWDot(children(0), children(1))),
+      new ExpressionInfo(classOf[DecimalDot].getName, "decimal_wdot"),
+      (children: Seq[Expression]) =>
+        DecimalDot(children(0), children(1), 8)),
     (new FunctionIdentifier("byte_sum_range"),
       new ExpressionInfo(classOf[ByteSumRange].getName, "byte_sum_range"),
       (children: Seq[Expression]) =>
@@ -113,12 +114,4 @@ object GraftFunctions {
         if (children.size == 1)
           Sum128(children(0), Literal(null))
         else Sum128(children(0), children(1))))
-
-  def ensureRegistered(spark: SparkSession): Unit =
-    all.foreach { case (ident, info, builder) =>
-      if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-        spark.sessionState.functionRegistry
-          .registerFunction(ident, info, builder)
-      }
-    }
 }

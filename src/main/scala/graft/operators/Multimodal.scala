@@ -394,7 +394,6 @@ object Multimodal {
     // sniff-rejects on the 'ustar' magic at offset 257. Pure narrow
     // map over a binary column.
     "q_multimodal_tar" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val docs = graft.Tables.table(s, d, "documents")
       val base = docs.select(col("doc_id"), col("text"))
         .withColumn("nm", concat(lit("doc"),

@@ -1269,7 +1269,6 @@ object StatsTests {
     // the non-cheap md5/conv from being duplicated into consumers.
     "q_stats_bootstrap_se" -> ((s, d) => {
       val dec = "DECIMAL(38,0)"
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val aggs = (1 to 32).flatMap(b => Seq(
         sum(col(s"w$b")).as(s"sw$b"),
         sum(expr(s"w$b * v4")).as(s"sv$b")))

@@ -885,7 +885,6 @@ object TextOps {
     // contract incl. edge arithmetic pinned in ByteOpsSpec; the bench
     // query fell to ~0.6 s). md5 stays Spark's builtin.
     "q_dedup_simhash" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       t(s, d, "documents")
         // null-text docs have no tokens: the old explode form (and the
         // oracle's unnest) drop them — the in-row fold must too
@@ -1235,7 +1234,6 @@ object TextOps {
     // oracle keeps the direct fold. Bench 1.15 → see OPTIMIZATION_r13.
     "q_text_mattr" -> ((s, d) => {
       val W = 50
-      graft.functions.GraftFunctions.ensureRegistered(s)
       t(s, d, "documents").filter(col("text").isNotNull)
         .withColumn("toks", split(col("text"), " "))
         .withColumn("n_tokens", size(col("toks")).cast("long"))

@@ -65,15 +65,13 @@ object VectorOps {
   private val PqRefineK = 50
 
   /** Exact-decimal dot product of two `array<float>` columns, as DOUBLE —
-    * the native codegen'd [[graft.functions.DecimalDot]], bit-identical
-    * to the interpreted decimal fold (and hence the DuckDB oracle) but
-    * without a Decimal allocation per element. The interpreted reference
-    * form it replaces is kept in [[dotFoldReference]] and equality is
-    * property-locked in FunctionsAndSourcesSpec. */
-  def dotExpr(s: SparkSession, a: String, b: String): Column = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
-    expr(s"decimal_dot($a, $b)")
-  }
+    * the native codegen'd [[graft.functions.DecimalDot]] at scale 10,
+    * bit-identical to the interpreted decimal fold (and hence the DuckDB
+    * oracle) but without a Decimal allocation per element. The
+    * interpreted reference form it replaces is kept in
+    * [[dotFoldReference]] and equality is property-locked in
+    * FunctionsAndSourcesSpec. */
+  def dotExpr(a: String, b: String): Column = expr(s"decimal_dot($a, $b)")
 
   /** The interpreted exact fold [[dotExpr]] is proven against. */
   def dotFoldReference(a: String, b: String): Column = expr(
@@ -87,21 +85,16 @@ object VectorOps {
     * stays inside whole-stage codegen). Used only to PRE-RANK candidates —
     * the exact-decimal [[dotExpr]] makes the final, oracle-deterministic
     * ordering. */
-  def fastDot(s: SparkSession, a: String, b: String): Column = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
-    expr(s"float_dot($a, $b)")
-  }
+  def fastDot(a: String, b: String): Column = expr(s"float_dot($a, $b)")
 
   /** Exact-decimal (scale 8) weighted dot of a float vector against a
     * DOUBLE-literal weight array — the codegen'd
-    * [[graft.functions.DecimalWDot]], bit-identical to the interpreted
-    * scale-8 fold it replaced ([[wdotFoldReference]], equality
+    * [[graft.functions.DecimalDot]] at scale 8, bit-identical to the
+    * interpreted scale-8 fold it replaced ([[wdotFoldReference]], equality
     * property-locked in FunctionsAndSourcesSpec) but one tight loop per
     * row instead of a Decimal allocation per element per plane. */
-  def wdotExpr(s: SparkSession, vec: String, weights: String): Column = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
+  def wdotExpr(vec: String, weights: String): Column =
     expr(s"decimal_wdot($vec, $weights)")
-  }
 
   /** The interpreted scale-8 fold [[wdotExpr]] is proven against. */
   def wdotFoldReference(vec: String, weights: String): Column = expr(
@@ -149,8 +142,6 @@ object VectorOps {
     val bucket = (0 until planes)
       .map(p => s"CASE WHEN ${proj(p)} > 0 THEN ${1L << p} ELSE 0 END")
       .mkString("CAST(", " + ", " AS BIGINT)")
-    graft.functions.GraftFunctions
-      .ensureRegistered(emb.sparkSession)
     // NULL embedding → NULL bucket (a CASE over NULL projections would
     // otherwise silently land every vector-less row in bucket 0)
     emb.withColumn("bucket",
@@ -187,7 +178,6 @@ object VectorOps {
         "CASE WHEN embedding IS NULL THEN NULL ELSE CAST(",
         " + ", " AS BIGINT) END")
     }
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val arr = (0 until tables).map(bucket).mkString("array(", ", ", ")")
     emb.select(col("vec_id"),
         posexplode(expr(arr)).as(Seq("tbl", "bucket")))
@@ -214,13 +204,13 @@ object VectorOps {
     corpus
       .crossJoin(probes)
       .filter(col("nb_id") =!= col("p_id"))
-      .withColumn("fastdot", fastDot(s, "eb", "pe"))
+      .withColumn("fastdot", fastDot("eb", "pe"))
       .select("p_id", "nb_id", "fastdot")
       .withColumn("_rn", row_number().over(wFast))
       .filter(col("_rn") <= 8)
       .join(corpus, "nb_id")
       .join(probes, "p_id")
-      .withColumn("cosine", dotExpr(s, "eb", "pe"))
+      .withColumn("cosine", dotExpr("eb", "pe"))
       .withColumn("_rx", row_number().over(wExact))
       .filter(col("_rx") <= 3)
       .select(col("p_id").as("vec_id"), col("nb_id"))
@@ -234,8 +224,7 @@ object VectorOps {
     * tie, which distinct centroids cannot produce). `k` is the nprobe
     * knob: each vector keeps its k nearest centroids, with the 1-based
     * nearness rank exposed as `crank` (the recall/cost-curve axis). */
-  private def centroidAssign(s: SparkSession, e: DataFrame,
-      vecs: DataFrame, k: Int = 1,
+  private def centroidAssign(e: DataFrame, vecs: DataFrame, k: Int = 1,
       nCents: Long = IvfCentroids): DataFrame = {
     val cents = broadcast(e.filter(col("vec_id") < nCents)
       .select(col("vec_id").as("cid"), col("embedding").as("cemb"),
@@ -245,7 +234,7 @@ object VectorOps {
     vecs
       .withColumn("_one", lit(1))
       .join(cents, "_one")
-      .withColumn("cdot", fastDot(s, "embedding", "cemb"))
+      .withColumn("cdot", fastDot("embedding", "cemb"))
       .select("vec_id", "cid", "cdot")
       .withColumn("_rn", row_number().over(wAssign))
       .filter(col("_rn") <= k)
@@ -279,7 +268,6 @@ object VectorOps {
     // bit-exact equivalence with [[pqDistsFoldReference]] pinned in
     // ByteOpsSpec
     val distsExpr = s"pq_dists(iv, cbs, $PqM, $PqSubDim)"
-    graft.functions.GraftFunctions.ensureRegistered(s)
     ints.withColumn("_one", lit(1))
       .join(cb, "_one")
       .withColumn("dists", expr(distsExpr))
@@ -326,7 +314,7 @@ object VectorOps {
     // the full-corpus coarse assignment costs a window shuffle; it is
     // needed by the mean aggregation, the residual join AND the caller's
     // candidate filter — persist once, return it, never re-derive
-    val cl = centroidAssign(s, e, e).select("vec_id", "cluster").persistScoped()
+    val cl = centroidAssign(e, e).select("vec_id", "cluster").persistScoped()
     val meanc = broadcast(ints.join(cl, "vec_id")
       .select(col("cluster"), posexplode(col("iv")).as(Seq("pos", "x")))
       .groupBy("cluster", "pos")
@@ -387,9 +375,9 @@ object VectorOps {
     * (k=PqRefineK). */
   private def ivfpqAdcTopK(s: SparkSession, d: String, k: Int): DataFrame = {
     val e = t(s, d, "embeddings")
-    val clusters = centroidAssign(s, e, e)
+    val clusters = centroidAssign(e, e)
     val probeClusters = broadcast(
-      centroidAssign(s, e, e.filter(col("vec_id") === 0), k = 2)
+      centroidAssign(e, e.filter(col("vec_id") === 0), k = 2)
         .select(col("cluster").as("probe_cluster")))
     // the probe's 32-entry distance table: its PQ argmin intermediate
     // IS the (m, entry, dist) table before the min is taken
@@ -421,7 +409,7 @@ object VectorOps {
         .select(col("embedding").as("probe_emb")))
       e.filter(col("vec_id") =!= 0)
         .crossJoin(probe)
-        .withColumn("cosine", dotExpr(s, "embedding", "probe_emb"))
+        .withColumn("cosine", dotExpr("embedding", "probe_emb"))
         .select("vec_id", "cosine")
         .orderBy(desc_nulls_last("cosine"), asc_nulls_last("vec_id"))
         .limit(10)
@@ -442,11 +430,11 @@ object VectorOps {
       val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"))
       val b = e.select(col("vec_id").as("vec_b"), col("embedding").as("eb"))
       a.join(b, col("vec_a") < col("vec_b"))
-        .withColumn("fastdot", fastDot(s, "ea", "eb"))
+        .withColumn("fastdot", fastDot("ea", "eb"))
         .orderBy(desc_nulls_last("fastdot"),
           asc_nulls_last("vec_a"), asc_nulls_last("vec_b"))
         .limit(100)
-        .withColumn("cosine", dotExpr(s, "ea", "eb"))
+        .withColumn("cosine", dotExpr("ea", "eb"))
         .select("vec_a", "vec_b", "cosine")
         .orderBy(desc_nulls_last("cosine"),
           asc_nulls_last("vec_a"), asc_nulls_last("vec_b"))
@@ -490,7 +478,7 @@ object VectorOps {
         .select(col("toks").as("pt")).withColumn("_one", lit(1)))
       val cosCand = e.filter(col("vec_id") =!= 0)
         .withColumn("_one", lit(1)).join(probeEmb, "_one")
-        .withColumn("score", dotExpr(s, "embedding", "pe"))
+        .withColumn("score", dotExpr("embedding", "pe"))
         .select(col("vec_id").as("doc_id"), col("score"))
         .orderBy(desc_nulls_last("score"), asc_nulls_last("doc_id"))
         .limit(50)
@@ -543,7 +531,7 @@ object VectorOps {
       val e = t(s, d, "embeddings").filter(col("embedding").isNotNull)
       val kSem = math.max(IvfCentroids.toLong,
         math.ceil(e.count() / 500.0).toLong)
-      val cl = centroidAssign(s, e, e, nCents = kSem)
+      val cl = centroidAssign(e, e, nCents = kSem)
         .select("vec_id", "cluster")
       val m = e.join(cl, "vec_id")
         .select(col("cluster"), col("vec_id"), col("embedding"))
@@ -558,10 +546,10 @@ object VectorOps {
         .orderBy(desc_nulls_last("cosine"), asc_nulls_last("vec_a"),
           asc_nulls_last("vec_b"))
       a.join(b, Seq("cluster")).filter(col("vec_a") < col("vec_b"))
-        .withColumn("fd", fastDot(s, "ea", "eb"))
+        .withColumn("fd", fastDot("ea", "eb"))
         .withColumn("_rn", row_number().over(wf))
         .filter(col("_rn") <= 20)
-        .withColumn("cosine", dotExpr(s, "ea", "eb"))
+        .withColumn("cosine", dotExpr("ea", "eb"))
         .withColumn("rank", row_number().over(wx).cast("long"))
         .filter(col("rank") <= 3)
         .select(col("cluster").cast("long").as("cluster"), col("rank"),
@@ -605,7 +593,7 @@ object VectorOps {
           "CAST(bit_count(w0 ^ pw0) + bit_count(w1 ^ pw1) AS BIGINT)"))
         .orderBy(asc_nulls_last("hamming"), asc_nulls_last("vec_id"))
         .limit(10)
-        .withColumn("cosine", dotExpr(s, "embedding", "pe"))
+        .withColumn("cosine", dotExpr("embedding", "pe"))
         .select("vec_id", "hamming", "cosine")
         .orderBy(asc_nulls_last("hamming"), asc_nulls_last("vec_id"))
     }),
@@ -720,7 +708,7 @@ object VectorOps {
     // first normalized component is ONE exact double division.
     "q_embed_norm" -> ((s, d) => {
       val e = t(s, d, "embeddings")
-      e.withColumn("norm", sqrt(dotExpr(s, "embedding", "embedding")))
+      e.withColumn("norm", sqrt(dotExpr("embedding", "embedding")))
         .select(col("vec_id"),
           size(col("embedding")).cast("long").as("dim"),
           col("norm"),
@@ -761,7 +749,7 @@ object VectorOps {
       val top8 = a.hint("shuffle_hash")
         .join(b, col("bucket") === col("bucket_b")
           && col("vec_id") =!= col("nb_id"))
-        .withColumn("fastdot", fastDot(s, "ea", "eb"))
+        .withColumn("fastdot", fastDot("ea", "eb"))
         .select("vec_id", "nb_id", "fastdot")
         .withColumn("_rn", row_number().over(wFast))
         .filter(col("_rn") <= 8)
@@ -769,7 +757,7 @@ object VectorOps {
         .join(e.select(col("vec_id"), col("embedding").as("ea")), "vec_id")
         .join(e.select(col("vec_id").as("nb_id"),
           col("embedding").as("eb")), "nb_id")
-        .withColumn("cosine", dotExpr(s, "ea", "eb"))
+        .withColumn("cosine", dotExpr("ea", "eb"))
         .withColumn("_rx", row_number().over(wExact))
         .filter(col("_rx") <= 3)
         .select("vec_id", "nb_id", "cosine")
@@ -806,13 +794,13 @@ object VectorOps {
       val top5 = corpus
         .crossJoin(probes)
         .filter(col("nb_id") =!= col("p_id"))
-        .withColumn("fastdot", fastDot(s, "eb", "pe"))
+        .withColumn("fastdot", fastDot("eb", "pe"))
         .select("p_id", "nb_id", "fastdot")
         .withColumn("_rn", row_number().over(wFast))
         .filter(col("_rn") <= 16)
         .join(corpus, "nb_id")
         .join(probes.select("p_id", "pe"), "p_id")
-        .withColumn("cosine", dotExpr(s, "eb", "pe"))
+        .withColumn("cosine", dotExpr("eb", "pe"))
         .withColumn("_rx", row_number().over(wExact))
         .filter(col("_rx") <= 5)
         .select("p_id", "nb_label")
@@ -848,7 +836,7 @@ object VectorOps {
       p.select(col("vec_id").as("va"), col("embedding").as("ea"))
         .join(p.select(col("vec_id").as("vb"), col("embedding").as("eb")),
           col("va") < col("vb"))
-        .withColumn("cosine", dotExpr(s, "ea", "eb"))
+        .withColumn("cosine", dotExpr("ea", "eb"))
         .groupBy(floor(col("cosine") * 10).cast("long").as("bin"))
         .agg(count(lit(1)).as("n_pairs"),
           graft.Det.dsum(col("cosine"), 7).as("sum_cos"))
@@ -869,11 +857,11 @@ object VectorOps {
     // centroid-dot tie, which distinct centroids cannot produce.
     "q_ann_ivf" -> ((s, d) => {
       val e = t(s, d, "embeddings")
-      val clusters = centroidAssign(s, e, e)
+      val clusters = centroidAssign(e, e)
       // the probe's cluster needs only the probe row's k dots — deriving
       // it from `clusters` would re-run the full corpus assignment
       val probeCluster = broadcast(
-        centroidAssign(s, e, e.filter(col("vec_id") === 0))
+        centroidAssign(e, e.filter(col("vec_id") === 0))
           .select(col("cluster").as("probe_cluster")))
       val probe = broadcast(e.filter(col("vec_id") === 0)
         .select(col("embedding").as("probe_emb")))
@@ -881,7 +869,7 @@ object VectorOps {
         .join(probeCluster, col("cluster") === col("probe_cluster"))
         .join(e, "vec_id")
         .crossJoin(probe)
-        .withColumn("cosine", dotExpr(s, "embedding", "probe_emb"))
+        .withColumn("cosine", dotExpr("embedding", "probe_emb"))
         .select("vec_id", "cosine")
         .orderBy(desc_nulls_last("cosine"), asc_nulls_last("vec_id"))
         .limit(10)
@@ -895,9 +883,9 @@ object VectorOps {
     // a real key; everything else stays linear.
     "q_ann_ivf_nprobe" -> ((s, d) => {
       val e = t(s, d, "embeddings")
-      val clusters = centroidAssign(s, e, e)
+      val clusters = centroidAssign(e, e)
       val probeClusters = broadcast(
-        centroidAssign(s, e, e.filter(col("vec_id") === 0), k = 2)
+        centroidAssign(e, e.filter(col("vec_id") === 0), k = 2)
           .select(col("cluster").as("probe_cluster")))
       val probe = broadcast(e.filter(col("vec_id") === 0)
         .select(col("embedding").as("probe_emb")))
@@ -905,7 +893,7 @@ object VectorOps {
         .join(probeClusters, col("cluster") === col("probe_cluster"))
         .join(e, "vec_id")
         .crossJoin(probe)
-        .withColumn("cosine", dotExpr(s, "embedding", "probe_emb"))
+        .withColumn("cosine", dotExpr("embedding", "probe_emb"))
         .select("vec_id", "cosine")
         .orderBy(desc_nulls_last("cosine"), asc_nulls_last("vec_id"))
         .limit(10)
@@ -924,20 +912,20 @@ object VectorOps {
     // per-nprobe rescans, no extra join for the curve axis.
     "q_ann_ivf_curve" -> ((s, d) => {
       val e = t(s, d, "embeddings")
-      val clusters = centroidAssign(s, e, e).select("vec_id", "cluster")
+      val clusters = centroidAssign(e, e).select("vec_id", "cluster")
       // the probe's full centroid ranking (8 rows, broadcast)
       val probeRanks = broadcast(
-        centroidAssign(s, e, e.filter(col("vec_id") === 0),
+        centroidAssign(e, e.filter(col("vec_id") === 0),
           k = IvfCentroids)
           .select(col("cluster").as("pcluster"), col("crank")))
       val probe = broadcast(e.filter(col("vec_id") === 0)
         .select(col("embedding").as("probe_emb")))
       val exact10 = broadcast(e.filter(col("vec_id") =!= 0)
         .crossJoin(probe)
-        .withColumn("fd", fastDot(s, "embedding", "probe_emb"))
+        .withColumn("fd", fastDot("embedding", "probe_emb"))
         .orderBy(desc_nulls_last("fd"), asc_nulls_last("vec_id"))
         .limit(100)
-        .withColumn("cosine", dotExpr(s, "embedding", "probe_emb"))
+        .withColumn("cosine", dotExpr("embedding", "probe_emb"))
         .orderBy(desc_nulls_last("cosine"), asc_nulls_last("vec_id"))
         .limit(10)
         .select(col("vec_id").as("hit_id"), lit(1L).as("is_hit")))
@@ -1015,12 +1003,12 @@ object VectorOps {
       // exact ground truth: top-10 with graded gain 11 − rank
       val exact = corpus.crossJoin(probes)
         .filter(col("nb_id") =!= col("p_id"))
-        .withColumn("fastdot", fastDot(s, "eb", "pe"))
+        .withColumn("fastdot", fastDot("eb", "pe"))
         .select("p_id", "nb_id", "fastdot")
         .withColumn("_rn", row_number().over(wFastEx))
         .filter(col("_rn") <= 20)
         .join(corpus, "nb_id").join(probes, "p_id")
-        .withColumn("cosine", dotExpr(s, "eb", "pe"))
+        .withColumn("cosine", dotExpr("eb", "pe"))
         .withColumn("_rx", row_number().over(wExactEx))
         .filter(col("_rx") <= 10)
         .select(col("p_id").as("vec_id"), col("nb_id"),
@@ -1040,14 +1028,14 @@ object VectorOps {
       val approx = a
         .join(b, col("bucket") === col("bucket_b")
           && col("vec_id") =!= col("nb_id"))
-        .withColumn("fastdot", fastDot(s, "ea", "eb"))
+        .withColumn("fastdot", fastDot("ea", "eb"))
         .select("vec_id", "nb_id", "fastdot")
         .withColumn("_rn", row_number().over(wFast))
         .filter(col("_rn") <= 16)
         .join(corpus, "nb_id")
         .join(probes.select(col("p_id").as("vec_id"), col("pe")),
           "vec_id")
-        .withColumn("cosine", dotExpr(s, "eb", "pe"))
+        .withColumn("cosine", dotExpr("eb", "pe"))
         .withColumn("posn", row_number().over(wExact))
         .filter(col("posn") <= 10)
         .select("vec_id", "posn", "nb_id")
@@ -1102,7 +1090,7 @@ object VectorOps {
           "vec_id")
         .join(emb.select(col("vec_id").as("nb_id"),
           col("embedding").as("eb")), "nb_id")
-        .withColumn("cosine", dotExpr(s, "ea", "eb"))
+        .withColumn("cosine", dotExpr("ea", "eb"))
         .withColumn("_r", row_number().over(wEx))
         .filter(col("_r") <= 3)
         .select(col("vec_id"), col("nb_id"), lit(1L).as("_m"))
@@ -1137,7 +1125,7 @@ object VectorOps {
         .filter(col("nb_id") =!= col("p_id"))
         .withColumn("dims", explode(array(lit(16), lit(32))))
         .withColumn("tdot",
-          dotExpr(s, "slice(eb, 1, dims)", "slice(pe, 1, dims)"))
+          dotExpr("slice(eb, 1, dims)", "slice(pe, 1, dims)"))
         .select("dims", "p_id", "nb_id", "tdot")
         .withColumn("_rn", row_number().over(wTr))
         .filter(col("_rn") <= 3)
@@ -1166,12 +1154,11 @@ object VectorOps {
     // slim (cluster, dim) shuffle; the 8 trained centroids broadcast as
     // rows; everything else is the q_ann_ivf shape.
     "q_ann_ivf_trained" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val e = t(s, d, "embeddings")
       // Lloyd step: per-(cluster, pos) exact mean → per-cluster DOUBLE
       // array ordered by pos
       val trained = broadcast(
-        centroidAssign(s, e, e).join(e, "vec_id")
+        centroidAssign(e, e).join(e, "vec_id")
           .select(col("cluster"),
             posexplode(col("embedding")).as(Seq("pos", "x")))
           .groupBy("cluster", "pos")
@@ -1184,10 +1171,10 @@ object VectorOps {
             lit(1).as("_one")))
       // exact scale-8 decimal dot of a float vector against the trained
       // double array — the codegen'd decimal_wdot, bit-identical to the
-      // interpreted wdot fold (DecimalWDot's proof; data-derived means
-      // |w| ≤ 1 sit far inside the fast path's |w| ≤ 16 band) but one
-      // tight codegen loop instead of 64 Decimal allocations per row
-      // per cluster
+      // interpreted wdot fold (DecimalDot's scale-8 proof; data-derived
+      // means |w| ≤ 1 keep |p| far inside the fast path's |p| ≤ 16
+      // band) but one tight codegen loop instead of 64 Decimal
+      // allocations per row per cluster
       val tdot = expr("decimal_wdot(embedding, cent)")
       val wAssign = Window.partitionBy("vec_id")
         .orderBy(desc_nulls_last("tdot"), asc_nulls_last("tcid"))
@@ -1207,7 +1194,7 @@ object VectorOps {
         .join(probeCluster, col("cluster") === col("probe_cluster"))
         .join(e, "vec_id")
         .crossJoin(probe)
-        .withColumn("cosine", dotExpr(s, "embedding", "probe_emb"))
+        .withColumn("cosine", dotExpr("embedding", "probe_emb"))
         .select("vec_id", "cosine")
         .orderBy(desc_nulls_last("cosine"), asc_nulls_last("vec_id"))
         .limit(10)
@@ -1248,7 +1235,6 @@ object VectorOps {
         s"decimal_wdot(embedding, array($w))"
       }
       val projArr = (0 until 16).map(proj).mkString("array(", ", ", ")")
-      graft.functions.GraftFunctions.ensureRegistered(s)
       t(s, d, "embeddings")
         .select(col("vec_id"),
           posexplode(expr(projArr)).as(Seq("rp_dim", "rp")))
@@ -1305,7 +1291,7 @@ object VectorOps {
       val dec = "decimal(38,0)"
       t(s, d, "embeddings")
         .filter(col("embedding").isNotNull)
-        .withColumn("norm", sqrt(dotExpr(s, "embedding", "embedding")))
+        .withColumn("norm", sqrt(dotExpr("embedding", "embedding")))
         .select(col("norm"),
           posexplode(col("embedding")).as(Seq("pos", "comp")))
         .withColumn("q", expr(
@@ -1774,7 +1760,6 @@ object VectorOps {
     // argument). Scale: the centroid is one slim (pos) shuffle with
     // partial aggregation; the scan is a narrow map + TakeOrdered(20).
     "q_embed_outlier" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val e = t(s, d, "embeddings").filter(col("embedding").isNotNull)
       val cent = broadcast(e
         .select(posexplode(col("embedding")).as(Seq("pos", "x")))
@@ -1845,7 +1830,7 @@ object VectorOps {
     // canonical distributed k-means step.
     "q_kmeans_iter" -> ((s, d) => {
       val e = t(s, d, "embeddings")
-      centroidAssign(s, e, e).join(e, "vec_id")
+      centroidAssign(e, e).join(e, "vec_id")
         .select(col("cluster"),
           posexplode(col("embedding")).as(Seq("pos", "x")))
         .groupBy("cluster", "pos")
@@ -2004,7 +1989,7 @@ object VectorOps {
       val e = t(s, d, "embeddings")
       val (ints, cl, meanc, rcb) = residualParts(s, d)
       val probeClusters = broadcast(
-        centroidAssign(s, e, e.filter(col("vec_id") === 0), k = 2)
+        centroidAssign(e, e.filter(col("vec_id") === 0), k = 2)
           .select(col("cluster").as("probe_cluster")))
       val codes = residualEncodedFrom(s, d, ints, cl, meanc, rcb)
         .filter(col("vec_id") =!= 0)
@@ -2058,7 +2043,7 @@ object VectorOps {
       broadcast(ivfpqAdcTopK(s, d, PqRefineK))
         .join(e, "vec_id")
         .crossJoin(probe)
-        .withColumn("cosine", dotExpr(s, "embedding", "probe_emb"))
+        .withColumn("cosine", dotExpr("embedding", "probe_emb"))
         .select("vec_id", "adc", "cosine")
         .orderBy(desc_nulls_last("cosine"), asc_nulls_last("vec_id"))
         .limit(10)
@@ -2078,10 +2063,10 @@ object VectorOps {
         .select(col("embedding").as("probe_emb")))
       val exact10 = e.filter(col("vec_id") =!= 0)
         .crossJoin(probe)
-        .withColumn("fd", fastDot(s, "embedding", "probe_emb"))
+        .withColumn("fd", fastDot("embedding", "probe_emb"))
         .orderBy(desc_nulls_last("fd"), asc_nulls_last("vec_id"))
         .limit(100)
-        .withColumn("cosine", dotExpr(s, "embedding", "probe_emb"))
+        .withColumn("cosine", dotExpr("embedding", "probe_emb"))
         .orderBy(desc_nulls_last("cosine"), asc_nulls_last("vec_id"))
         .limit(10)
         .select("vec_id")

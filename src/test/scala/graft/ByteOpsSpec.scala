@@ -12,8 +12,6 @@ import org.apache.spark.sql.functions._
 class ByteOpsSpec extends SparkSpec {
   import spark.implicits._
 
-  graft.functions.GraftFunctions.ensureRegistered(spark)
-
   /** The exact HOF checksum fold q_multimodal_tar shipped through r12. */
   private val hofTarChecksum =
     "aggregate(transform(sequence(0, 511), i -> CASE WHEN " +

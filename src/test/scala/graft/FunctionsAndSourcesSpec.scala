@@ -5,14 +5,12 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.{FloatDot, GraftFunctions}
 import graft.sources.Sources
 
 class FunctionsAndSourcesSpec extends SparkSpec {
   import spark.implicits._
 
   test("float_dot native expression matches a hand computation") {
-    GraftFunctions.ensureRegistered(spark)
     val df = Seq((Seq(1.0f, 2.0f, 3.0f), Seq(4.0f, 5.0f, 6.0f)))
       .toDF("a", "b")
     val got = df.select(expr("float_dot(a, b)")).head.getDouble(0)
@@ -21,7 +19,6 @@ class FunctionsAndSourcesSpec extends SparkSpec {
 
   test("float_dot survives whole-stage codegen over real embeddings and " +
       "agrees with the interpreted path") {
-    GraftFunctions.ensureRegistered(spark)
     val e = Tables.table(spark, sf, "embeddings").limit(50)
     val pairs = e.select($"vec_id".as("ia"), $"embedding".as("ea"))
       .crossJoin(e.select($"vec_id".as("ib"), $"embedding".as("eb")))
@@ -39,7 +36,6 @@ class FunctionsAndSourcesSpec extends SparkSpec {
   }
 
   test("float_dot is null-safe and handles length mismatch") {
-    GraftFunctions.ensureRegistered(spark)
     val df = Seq((Some(Seq(1.0f, 2.0f)), Option.empty[Seq[Float]]),
       (Some(Seq(1.0f, 2.0f, 3.0f)), Some(Seq(2.0f))))
       .toDF("a", "b")
@@ -50,7 +46,6 @@ class FunctionsAndSourcesSpec extends SparkSpec {
 
   test("decimal_dot equals the interpreted exact-decimal fold bit-for-bit " +
       "over all real embedding pairs and adversarial values") {
-    GraftFunctions.ensureRegistered(spark)
     // every pair from the fixture corpus: codegen'd DecimalDot vs the
     // interpreted reference fold it replaced
     val e = Tables.table(spark, sf, "embeddings").limit(60)
@@ -118,7 +113,6 @@ class FunctionsAndSourcesSpec extends SparkSpec {
 
   test("decimal_wdot equals the interpreted scale-8 weighted fold " +
       "bit-for-bit over real embeddings and adversarial values") {
-    GraftFunctions.ensureRegistered(spark)
     // fixture vectors against the actual hyperplane weight families the
     // engine uses: md5 halves (−7.5 … 7.5, annBuckets) and ±1 signs
     // (q_embed_rp) — plus pseudo-random double weights
@@ -169,6 +163,15 @@ class FunctionsAndSourcesSpec extends SparkSpec {
         .collect()
       assert(big(0).isNullAt(0) && big(0).isNullAt(1))
     } finally spark.conf.set("spark.sql.ansi.enabled", prevAnsi)
+    // ANSI on (the default): overflow throws, naming decimal_wdot
+    val thrownW = intercept[Exception] {
+      Seq((Seq(1e6f), Seq(1e7))).toDF("a", "b")
+        .select(expr("decimal_wdot(a, b)")).collect()
+    }
+    def chain(e: Throwable): Seq[Throwable] =
+      if (e == null) Nil else e +: chain(e.getCause)
+    assert(chain(thrownW).exists(t =>
+      String.valueOf(t.getMessage).contains("decimal_wdot: ")))
     // null semantics: null array, length mismatch
     val nullsW = Seq(
       (Some(Seq(1.0f, 2.0f)), Option.empty[Seq[Double]]),

@@ -317,7 +317,7 @@ class OperatorsSpec extends SparkSpec {
     val probe = broadcast(e.filter(col("vec_id") === 0)
       .select(col("embedding").as("pe")))
     val exact = e.filter(col("vec_id") =!= 0).crossJoin(probe)
-      .withColumn("c", VectorOps.dotExpr(spark, "embedding", "pe"))
+      .withColumn("c", VectorOps.dotExpr("embedding", "pe"))
       .orderBy(desc("c"), asc("vec_id")).limit(10)
       .collect().map(_.getLong(0)).toSet
     assert(row.getLong(1) == (adc & exact).size.toLong)
@@ -338,7 +338,7 @@ class OperatorsSpec extends SparkSpec {
     val probe = broadcast(e.filter(col("vec_id") === 0)
       .select(col("embedding").as("pe")))
     val exact10 = e.filter(col("vec_id") =!= 0).crossJoin(probe)
-      .withColumn("c", VectorOps.dotExpr(spark, "embedding", "pe"))
+      .withColumn("c", VectorOps.dotExpr("embedding", "pe"))
       .orderBy(desc("c"), asc("vec_id")).limit(10)
       .collect().map(_.getLong(0)).toSet
     // superset law: every exact-top-10 member among the ADC top-10 is

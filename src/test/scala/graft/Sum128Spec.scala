@@ -12,8 +12,6 @@ import org.apache.spark.sql.functions._
 class Sum128Spec extends SparkSpec {
   import spark.implicits._
 
-  graft.functions.GraftFunctions.ensureRegistered(spark)
-
   private def natSql(scale: Int) =
     s"CAST(sum128(CAST(CAST(x AS DECIMAL(18,$scale)) " +
       s"* ${math.pow(10, scale).toLong} AS BIGINT), $scale) AS DOUBLE)"
@@ -113,5 +111,12 @@ class Sum128Spec extends SparkSpec {
     val r = fresh.range(3).select(
       Det.dsum(col("id").cast("double")).as("s")).head()
     assert(r.getDouble(0) == 3.0)
+    // and so must every other native function in the catalog
+    graft.functions.GraftFunctions.all.foreach { case (ident, info, _) =>
+      val name = ident.funcName
+      assert(fresh.catalog.functionExists(name), s"$name unresolved")
+      assert(fresh.catalog.getFunction(name).className == info.getClassName,
+        s"$name resolves to the wrong class")
+    }
   }
 }

@@ -615,8 +615,8 @@ class VectorTrainSpec extends SparkSpec {
         col("embedding").as("eb"))
       val scored = corpus.crossJoin(probes)
         .filter(col("nb_id") =!= col("p_id"))
-        .withColumn("fastdot", VectorOps.fastDot(spark, "eb", "pe"))
-        .withColumn("cosine", VectorOps.dotExpr(spark, "eb", "pe"))
+        .withColumn("fastdot", VectorOps.fastDot("eb", "pe"))
+        .withColumn("cosine", VectorOps.dotExpr("eb", "pe"))
         .withColumn("_rn", org.apache.spark.sql.functions.row_number()
           .over(Window.partitionBy("p_id")
             .orderBy(desc_nulls_last("fastdot"), asc_nulls_last("nb_id"))))
