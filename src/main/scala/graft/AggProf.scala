@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch profiling harness — not part of the contract; rewritten ad
@@ -13,21 +12,9 @@ import org.apache.spark.sql.functions._
 object AggProf {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    Tables.names.foreach { n =>
-      try Tables.table(spark, d, n)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Session.local(cpus, Session.joinPreference)
+    Tables.warm(spark, d)
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     def docs = Tables.table(spark, d, "documents")

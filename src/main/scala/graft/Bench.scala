@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Driver-run benchmark: times every declared query at
@@ -275,12 +274,7 @@ object Bench {
     // default 32: the harness contract is local[32] with 32 shuffle
     // partitions (the round-1 default of 4 left 8× parallelism unused on
     // the 32-core host); SPARK_GRAFT_CPUS still overrides for local runs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    var builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // Scale-adaptive split/coalesce knobs, parameterised per the
     // optimization-round contract (scale-dependent settings must be
     // conf/env, never constants tuned to one environment). ALL default
@@ -293,7 +287,7 @@ object Bench {
     // run; setting them to fixture-proportional values for an sf1
     // core-scaling proof is the carried "Core-scaling proof" item in
     // ROADMAP.md. At 100 TB the defaults are already right.
-    Seq(
+    val splits = Seq(
       "SPARK_GRAFT_MAX_PART_B" -> "spark.sql.files.maxPartitionBytes",
       "SPARK_GRAFT_OPEN_COST_B" -> "spark.sql.files.openCostInBytes",
       "SPARK_GRAFT_MIN_SPLITS" -> "spark.sql.files.minPartitionNum",
@@ -301,52 +295,9 @@ object Bench {
         "spark.sql.adaptive.advisoryPartitionSizeInBytes",
       "SPARK_GRAFT_MIN_COALESCE_B" ->
         "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    ).foreach { case (env, conf) =>
-      sys.env.get(env).foreach(v => builder = builder.config(conf, v))
-    }
-    val spark = builder
-      // guide §9 baseline: let the planner pick SHUFFLED HASH JOIN when
-      // its size conditions hold (build side under the per-partition
-      // threshold and 3× smaller than probe) instead of always
-      // sort-merge — skips both sort passes on qualifying joins. Same
-      // setting at any scale (the planner's size gates, not this flag,
-      // decide per join); env-overridable for A/B.
-      // Caveat (r13 ADVICE): an SHJ build side cannot SPILL — a bad
-      // size estimate or a skewed partition OOMs where sort-merge
-      // degrades gracefully. The per-join gates bound the exposure and
-      // SPARK_GRAFT_PREFER_SMJ=true is the escape hatch; at cluster
-      // scale pair it with AQE skew-join splitting (on by default).
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The allowlisted bounded-frame global windows (PlanRegressionSpec
-    // pins exactly one unpartitioned WindowExec on 4 queries, each over a
-    // day-grain/value-bucket frame bounded by time span or value domain,
-    // not event count) trip WindowExec's blanket "No Partition Defined"
-    // warning on every bench run. The plan gate already audits those
-    // nodes; the warning in the driver's bench tail is noise that makes a
-    // verified-bounded window look like a scale bug, so silence exactly
-    // that logger package and nothing else.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window",
-      org.apache.logging.log4j.Level.ERROR)
-    // Warm the JVM/codegen paths and the OS page cache with ONE un-timed
-    // read-through of every base table (noop sink decodes every column).
-    // MEASUREMENT FIX (r13, declared in OPTIMIZATION_r13.md): this used
-    // to be `.cache().count()` per table, which pinned Spark-side
-    // materializations of the base tables for the whole run — the
-    // optimization-round contract forbids caching base tables outside
-    // the timed region, so every timed query now reads parquet itself
-    // (the OS page cache is the only warm state left, the same state a
-    // cluster's second scan of hot data sees). A/B at sf0.1: see
-    // OPTIMIZATION_r13.md §methodology.
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    Tables.names.foreach { n =>
-      try Tables.table(spark, sfDir, n)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
+    ).flatMap { case (env, conf) => sys.env.get(env).map(conf -> _) }
+    val spark = Session.local(cpus, Session.joinPreference +: splits: _*)
+    Tables.warm(spark, sfDir)
     // Interleaved best-of-3: round-robin the full query list three times so
     // a transient host stall (observed round 1: 16 s on a 0.3 s broadcast
     // semi join) can poison at most one of a query's three samples — never

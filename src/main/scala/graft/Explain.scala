@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection entry point: prints the formatted physical plan of one
   * (or every) declared query so scan pruning / pushdown / join strategy /
   * codegen spans can be audited. Usage:
@@ -11,15 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q_scan_pruned")
     val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(4, Session.joinPreference)
     val names = if (name == "ALL") SparkEntry.queries.keys.toSeq.sorted
       else Seq(name)
     names.foreach { n =>

@@ -106,14 +106,7 @@ object MqttIngestBench {
 
   def main(args: Array[String]): Unit = {
     val total = args.headOption.map(_.toLong).getOrElse(120000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // JVM/codegen warmup + one throwaway config so the measured runs
     // don't pay first-query streaming initialization
     spark.range(100000L).selectExpr("sum(id)").collect()

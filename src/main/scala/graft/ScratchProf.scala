@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Scratch profiling harness — not part of the contract; rewritten ad hoc
   * each round to localize time inside the slowest declared queries.
@@ -14,23 +13,9 @@ object ScratchProf {
     val names = args.headOption.map(_.split(",").toSeq)
       .getOrElse(Seq("q_corpus_curate_v3"))
     val d = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // same warm protocol as Bench: JVM/codegen + OS page cache, nothing
-    // retained by Spark
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    Tables.names.foreach { n =>
-      try Tables.table(spark, d, n)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Session.local(cpus, Session.joinPreference)
+    Tables.warm(spark, d)
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       var bestPlan = Double.MaxValue

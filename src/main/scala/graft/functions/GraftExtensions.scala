@@ -3,8 +3,9 @@ package graft.functions
 import org.apache.spark.sql.{SparkSessionExtensions,
   SparkSessionExtensionsProvider}
 
-/** Session-extension installer: `SparkSession.builder()
-  * .withExtensions(new GraftExtensions)` or cluster-wide via
+/** Session-extension installer: `graft.Session.local(cpus,
+  * "spark.sql.extensions" -> classOf[GraftExtensions].getName)` or
+  * cluster-wide via
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
   * Injects the opt-in deterministic-sum optimizer rule
   * (`spark.graft.deterministicSum=true`); the native functions come with

@@ -37,26 +37,21 @@ final class LaneLog(cap: Int = LaneLog.Cap) {
   def dropped: Long = synchronized(droppedLines)
   def held: Int = synchronized(lines.size)
 
-  /** Lines [from, until) as one block, each line ending in '\n'. The
-    * range is clamped to the held lines, so an offset from another log
-    * (a checkpoint of an earlier bus) reads nothing instead of throwing. */
+  /** Lines [from, until) as one block, each payload framed by its
+    * length (4 bytes, big-endian) — never by a delimiter, since a raw
+    * newline is legal JSON whitespace inside one event. The range is
+    * clamped to the held lines, so an offset from another log (a
+    * checkpoint of an earlier bus) reads nothing instead of throwing. */
   def block(from: Long, until: Long): Array[Byte] = synchronized {
     val hi = (math.max(math.min(until, base + lines.size), base) - base).toInt
     val lo = (math.min(math.max(from, base), base + hi) - base).toInt
     var n = 0
     var i = lo
-    while (i < hi) { n += lines(i).length + 1; i += 1 }
-    val out = new Array[Byte](n)
-    var pos = 0
+    while (i < hi) { n += 4 + lines(i).length; i += 1 }
+    val buf = java.nio.ByteBuffer.allocate(n)
     i = lo
-    while (i < hi) {
-      val l = lines(i)
-      System.arraycopy(l, 0, out, pos, l.length)
-      out(pos + l.length) = '\n'
-      pos += l.length + 1
-      i += 1
-    }
-    out
+    while (i < hi) { buf.putInt(lines(i).length).put(lines(i)); i += 1 }
+    buf.array()
   }
 
   /** Forget every line before `upTo`. An offset past the log's end
@@ -176,13 +171,12 @@ object LaneReaderFactory extends PartitionReaderFactory {
   def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
       private val block = p.asInstanceOf[LaneBlock].block
-      private var pos = 0
+      private val buf = java.nio.ByteBuffer.wrap(block)
       private var row: InternalRow = _
-      def next(): Boolean = pos < block.length && {
-        var nl = pos
-        while (block(nl) != '\n') nl += 1
-        row = InternalRow(UTF8String.fromBytes(block, pos, nl - pos))
-        pos = nl + 1
+      def next(): Boolean = buf.hasRemaining && {
+        val n = buf.getInt()
+        row = InternalRow(UTF8String.fromBytes(block, buf.position(), n))
+        buf.position(buf.position() + n)
         true
       }
       def get(): InternalRow = row

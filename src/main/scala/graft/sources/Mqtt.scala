@@ -140,6 +140,25 @@ object Mqtt {
   def readU16(b: Array[Byte], off: Int): Int =
     ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
 
+  /** Allocate a packet id for a QoS 1 PUBLISH or a (UN)SUBSCRIBE: counts
+    * 1..65535 and wraps back to 1 (spec §2.3.1 forbids id 0), skipping
+    * ids still in flight. Broker and client share this one rule. */
+  def allocId(next: AtomicInteger,
+      inFlight: ConcurrentHashMap[Integer, _]): Int = {
+    var id = 0
+    do id = next.getAndUpdate(i => if (i >= 0xffff) 1 else i + 1)
+    while (inFlight.containsKey(Integer.valueOf(id)))
+    id
+  }
+
+  /** The non-zero packet id at `off`; id 0 is a protocol violation
+    * (spec §2.3.1) that fails the connection. */
+  def readPacketId(b: Array[Byte], off: Int): Int = {
+    val id = readU16(b, off)
+    if (id == 0) throw new IOException("packet id 0 (spec §2.3.1)")
+    id
+  }
+
   def readStr(b: Array[Byte], off: Int): (String, Int) = {
     val n = readU16(b, off)
     (new String(b, off + 2, n, UTF_8), off + 2 + n)
@@ -171,13 +190,7 @@ final class MqttBroker(port: Int = 0) {
     val subs = TrieMap.empty[String, Int] // filter -> granted qos
     val pending = new ConcurrentHashMap[Integer, Pending]()
     val nextId = new AtomicInteger(1)
-    def allocId(): Int = {
-      var id = 0
-      do {
-        id = nextId.getAndUpdate(i => if (i >= 0xffff) 1 else i + 1)
-      } while (pending.containsKey(Integer.valueOf(id)))
-      id
-    }
+    def allocId(): Int = Mqtt.allocId(nextId, pending)
     def send(bytes: Array[Byte]): Unit =
       out.synchronized { out.write(bytes); out.flush() }
   }
@@ -268,7 +281,7 @@ final class MqttBroker(port: Int = 0) {
             case SUBSCRIBE =>
               if ((h & 0x0f) != 2)
                 throw new IOException("SUBSCRIBE flags must be 0b0010")
-              val pid = readU16(b, 0)
+              val pid = readPacketId(b, 0)
               var off = 2
               val granted = Array.newBuilder[Byte]
               val newFilters = Seq.newBuilder[(String, Int)]
@@ -315,7 +328,7 @@ final class MqttBroker(port: Int = 0) {
                   }
               }
             case UNSUBSCRIBE =>
-              val pid = readU16(b, 0)
+              val pid = readPacketId(b, 0)
               var off = 2
               while (off < b.length) {
                 val (filter, o) = readStr(b, off)
@@ -329,7 +342,7 @@ final class MqttBroker(port: Int = 0) {
               if (qos > 1) throw new IOException("QoS 2 not supported")
               val (topic, o) = readStr(b, 0)
               val (pid, payloadOff) =
-                if (qos == 1) (readU16(b, o), o + 2) else (0, o)
+                if (qos == 1) (readPacketId(b, o), o + 2) else (0, o)
               val payload = java.util.Arrays
                 .copyOfRange(b, payloadOff, b.length)
               if (qos == 1)
@@ -466,7 +479,7 @@ final class MqttClient(host: String, port: Int,
       (cb: (String, Array[Byte]) => Unit): Unit = {
     TopicMatch.validate(filter)
     subs.add((filter, cb))
-    val id = nextId.getAndIncrement() & 0xffff
+    val id = allocId(nextId, acks)
     acks.put(Integer.valueOf(id), new CountDownLatch(1))
     send(packet((SUBSCRIBE << 4) | 0x02,
       Array[Byte]((id >> 8).toByte, (id & 0xff).toByte)
@@ -484,7 +497,7 @@ final class MqttClient(host: String, port: Int,
     if (qos == 0)
       send(publishPacket(topic, payload, 0, 0, dup = false, retain))
     else {
-      val id = nextId.getAndIncrement() & 0xffff
+      val id = allocId(nextId, acks)
       val latch = new CountDownLatch(1)
       acks.put(Integer.valueOf(id), latch)
       send(publishPacket(topic, payload, 1, id, dup = false, retain))
@@ -557,7 +570,7 @@ object MqttSink {
   * on the wire) to the lane's [[LaneLog]] on the driver, and
   * [[MqttLaneSource]] reads all lanes as ONE stream: per micro-batch,
   * one input partition per non-empty lane, carrying that lane's new
-  * payloads as one newline-joined byte block. The Spark-side plan is
+  * payloads as one length-framed byte block. The Spark-side plan is
   * EXACTLY the proven [[Sources.SocketJsonBus.parse]] — public
   * connector API only, no internal Spark classes in the data path.
   *

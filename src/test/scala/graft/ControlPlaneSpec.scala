@@ -761,20 +761,15 @@ class ControlPlaneSpec extends SparkSpec {
 
   test("deterministic-sum rule makes sum(double) partition-invariant " +
       "and equal to the explicit decimal form") {
-    // Extensions only apply at session CREATION, and the conf-based form
-    // (spark.sql.extensions) is STATIC — ignored once a SparkContext
-    // exists. withExtensions() applies programmatically either way; clear
-    // the fixture session so the builder makes a genuinely new one
-    // (sharing the JVM-wide SparkContext).
+    // Extensions only apply at session CREATION: clear the fixture
+    // session so the factory makes a genuinely new one on the JVM-wide
+    // SparkContext (the factory installs spark.sql.extensions on that
+    // session itself; Spark would read it from the context's conf only).
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-detsum")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s2 = Session.local(4, "spark.app.name" -> "graft-detsum",
+      "spark.sql.extensions" -> classOf[graft.functions.GraftExtensions]
+        .getName)
     try {
       val li = s2.read.parquet(s"$sf/lineitem.parquet")
         .select("l_extendedprice")

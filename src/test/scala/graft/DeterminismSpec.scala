@@ -145,4 +145,22 @@ class DeterminismSpec extends SparkSpec {
       NamedStages.clearAll(spark)
     }
   }
+
+  test("session factory contract: local[cpus], cpus shuffle partitions, " +
+      "UTC, no UI, Spark's join preference unless a query main asks, " +
+      "extra settings passed through") {
+    // SparkSpec's session is Session.local(4, spark.app.name -> graft-test)
+    assert(spark.sparkContext.master == "local[4]")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
+    assert(spark.sparkContext.uiWebUrl.isEmpty)
+    assert(spark.conf.get("spark.sql.join.preferSortMergeJoin") == "true",
+      "sessions other than the query mains keep Spark's default")
+    assert(spark.sparkContext.appName == "graft-test")
+    val (key, value) = Session.joinPreference
+    assert(key == "spark.sql.join.preferSortMergeJoin")
+    if (!sys.env.contains("SPARK_GRAFT_PREFER_SMJ"))
+      assert(value == "false", "query mains prefer shuffled hash join")
+  }
 }

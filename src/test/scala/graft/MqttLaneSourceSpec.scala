@@ -71,6 +71,38 @@ class MqttLaneSourceSpec extends SparkSpec {
     assert(log.held == 1 && log.dropped == 2 && log.end == 4)
   }
 
+  test("a payload with raw newlines (pretty-printed JSON) is one row, " +
+      "parsed, not split into unparseable fragments") {
+    val broker = new MqttBroker().start()
+    val bus = new MqttBus("127.0.0.1", broker.boundPort, "lane/#",
+      clientId = "lane-multiline")
+    val got = new ConcurrentLinkedQueue[Long]()
+    val q = bus.subscribe(spark).select("event_id").writeStream
+      .trigger(Trigger.ProcessingTime("100 milliseconds"))
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        b.collect().foreach(r => got.add(r.getLong(0)))
+      }.start()
+    val pub = new MqttClient("127.0.0.1", broker.boundPort, "lane-pub-ml")
+      .connect()
+    try {
+      pub.publish("lane/ev", "{\n  \"event_id\": 7,\n  \"ts_us\": 0,\n" +
+        "  \"user_id\": 0,\n  \"event_type\": \"click\",\n" +
+        "  \"value\": 1.0,\n  \"props\": \"{}\"\n}")
+      // a one-line marker behind it on the same lane: once the marker is
+      // read, the pretty-printed event before it has been read too
+      pub.publish("lane/ev", """{"event_id":8,"ts_us":0,"user_id":0,""" +
+        """"event_type":"click","value":1.0,"props":"{}"}""")
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!got.contains(8L) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      q.processAllAvailable()
+      assert(q.exception.isEmpty)
+      assert(got.asScala.toSeq.sorted == Seq(7L, 8L))
+    } finally {
+      q.stop(); pub.disconnect(); bus.close(); broker.stop()
+    }
+  }
+
   test("a query restarted on an existing checkpoint with a fresh bus " +
       "starts from the new log's end instead of throwing") {
     val broker = new MqttBroker().start()

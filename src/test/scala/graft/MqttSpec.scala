@@ -165,6 +165,33 @@ class MqttSpec extends AnyFunSuite {
     }
   }
 
+  test("packet ids (spec §2.3.1): a QoS 1 PUBLISH with id 0 fails its " +
+      "connection, and ids wrap 65535 -> 1 so one client's 65,536 QoS 1 " +
+      "publishes are all acknowledged") {
+    withBroker { b =>
+      val sock = new Socket("127.0.0.1", b.boundPort)
+      val out = sock.getOutputStream
+      val in = sock.getInputStream
+      out.write(Mqtt.packet(Mqtt.CONNECT << 4,
+        Mqtt.utf8("MQTT") ++ Array[Byte](4, 2, 0, 60) ++ Mqtt.utf8("id0")))
+      out.flush()
+      assert(Mqtt.readPacket(in)._2(1) == 0)
+      out.write(Mqtt.publishPacket("t", "x".getBytes(UTF_8), qos = 1,
+        packetId = 0, dup = false))
+      out.flush()
+      sock.setSoTimeout(5000)
+      assert(in.read() == -1, "an id-0 PUBLISH must drop the connection")
+      sock.close()
+      // the 65,536th publish is the one that would reuse id 0
+      val pub = new MqttClient("127.0.0.1", b.boundPort, "wrap").connect()
+      val n = 65536
+      (1 to n).foreach(i => pub.publish("graft/wrap", s"m$i"))
+      // the connection survived the wrap: a SUBSCRIBE still gets its ack
+      pub.subscribe("graft/after-wrap")((_, _) => ())
+      pub.disconnect()
+    }
+  }
+
   test("retained messages (spec §3.3.1.3): a late subscriber is primed " +
       "with the last retained payload per topic under RETAIN=1, live " +
       "fan-out carries RETAIN=0, last-writer-wins, and a zero-byte " +
