@@ -19,19 +19,18 @@ import graft.streaming.NearDupStream
   * independent subscriber.
   *
   * Reports docs/second from first publish to the last doc landing in
-  * the pipeline, per lane count — the "does the WHOLE ingest chain
-  * scale with lanes, or only the raw socket path?" table MqttIngestBench
-  * could not answer. Honesty rails: the source-row count must equal the
-  * published count EXACTLY (listener-accumulated numInputRows — a
-  * lane-log drop fails the run), zero lane-log drops, and the end-to-end
-  * pair SET received over MQTT must equal the batch q_dedup_pairs
-  * relation on the same corpus (at-least-once duplicates collapse by
-  * set identity) — so a faster configuration can never buy its rate
-  * with silent loss. Run at BOTH sf0.01 and sf0.1 (the NearDupProf
-  * protocol) so fixed drain cost separates from marginal per-doc cost.
+  * the pipeline, per lane count: does the WHOLE ingest chain scale with
+  * lanes, or only the raw socket path? Honesty rails: the source-row
+  * count must equal the published count EXACTLY (listener-accumulated
+  * numInputRows — a lane-log drop fails the run), zero lane-log drops,
+  * and the end-to-end pair SET received over MQTT must equal the batch
+  * q_dedup_pairs relation on the same corpus (at-least-once duplicates
+  * collapse by set identity) — so a faster configuration can never buy
+  * its rate with silent loss. Run at BOTH sf0.01 and sf0.1 so fixed
+  * drain cost separates from marginal per-doc cost.
   *
   * Run: sbt "runMain graft.NearDupIngestBench [sfDir]"
-  * (SPARK_GRAFT_CPUS=4 default — the StreamBench contract).
+  * (SPARK_GRAFT_CPUS, default 4).
   */
 object NearDupIngestBench {
 
@@ -148,7 +147,7 @@ object NearDupIngestBench {
     }
 
     run(1) // throwaway: JVM/codegen/streaming warmup
-    // best-of-2 fresh runs per configuration (the NearDupProf protocol):
+    // best-of-2 fresh runs per configuration:
     // a 200 ms-trigger pipeline measured over seconds is ±1 trigger
     // noisy, and a GC/retransmit hiccup must not masquerade as a lane
     // scaling cliff

@@ -1,11 +1,11 @@
 package graft
 
-/** Scratch profiling harness — not part of the contract; rewritten ad hoc
-  * each round to localize time inside the slowest declared queries.
-  * Round 13: per-query decomposition of PLANNING (analysis + optimization
-  * + physical planning, driver-side single-threaded) vs EXECUTION (noop
-  * sink), best-of-3 each, mirroring the bench's warm protocol — tells us
-  * whether a slow query needs a better plan or a smaller plan.
+/** Profiler of named declared queries — not part of the driver
+  * contract. Splits each query into PLANNING (analysis + optimization +
+  * physical planning, driver-side single-threaded) vs EXECUTION (noop
+  * sink), best-of-3 each, after the bench's warm-up — tells whether a
+  * slow query needs a better plan or a smaller plan. It profiles the
+  * declared plan itself, never a hand-built copy of its phases.
   * Usage: sbt "runMain graft.ScratchProf q_a,q_b [sfDir]"
   */
 object ScratchProf {

@@ -88,7 +88,7 @@ object Det {
     * cast-to-DECIMAL(18,scale) rounding, scaled to an exact BIGINT and
     * summed in a two-long 128-bit buffer with checked overflow, instead
     * of SUM over a DECIMAL(28,scale) buffer whose >18-digit precision
-    * serializes a BigDecimal per update (r13 AggProf: ~0.2 s per
+    * serializes a BigDecimal per update (measured in r13: ~0.2 s per
     * aggregate per 600k rows). Same exact total, same NULL behavior,
     * same final DECIMAL→DOUBLE conversion — value-identical by
     * construction and property-pinned in Sum128Spec; the oracle mirror

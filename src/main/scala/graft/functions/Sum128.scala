@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   * DECIMAL(28,s) buffer — precision > 18 stores as a serialized
   * BigDecimal in the unsafe aggregation row, so every update pays a
   * deserialize + BigDecimal.add + reserialize (~0.2 s per aggregate
-  * per 600k rows measured in r13's AggProf decomposition of
+  * per 600k rows measured in r13's phase-by-phase profile of
   * q_agg_hash). This aggregate keeps the buffer as two primitive
   * longs on the fast unsafe-row path and stays inside whole-stage
   * codegen (every update/merge expression below is a codegen'd

@@ -68,17 +68,10 @@ object VectorOps {
     * the native codegen'd [[graft.functions.DecimalDot]] at scale 10,
     * bit-identical to the interpreted decimal fold (and hence the DuckDB
     * oracle) but without a Decimal allocation per element. The
-    * interpreted reference form it replaces is kept in
-    * [[dotFoldReference]] and equality is property-locked in
+    * interpreted reference fold it replaces lives in test sources
+    * (`graft.FoldReferences.dot`) and equality is property-locked in
     * FunctionsAndSourcesSpec. */
   def dotExpr(a: String, b: String): Column = expr(s"decimal_dot($a, $b)")
-
-  /** The interpreted exact fold [[dotExpr]] is proven against. */
-  def dotFoldReference(a: String, b: String): Column = expr(
-    s"CAST(aggregate(zip_with($a, $b, " +
-      "(x, y) -> CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) " +
-      "AS DECIMAL(20,10))), CAST(0 AS DECIMAL(30,10)), " +
-      "(acc, p) -> CAST(acc + p AS DECIMAL(30,10))) AS DOUBLE)")
 
   /** Fast screening dot product: the native codegen'd
     * [[graft.functions.FloatDot]] expression (no per-row serialization,
@@ -90,18 +83,11 @@ object VectorOps {
   /** Exact-decimal (scale 8) weighted dot of a float vector against a
     * DOUBLE-literal weight array — the codegen'd
     * [[graft.functions.DecimalDot]] at scale 8, bit-identical to the
-    * interpreted scale-8 fold it replaced ([[wdotFoldReference]], equality
-    * property-locked in FunctionsAndSourcesSpec) but one tight loop per
-    * row instead of a Decimal allocation per element per plane. */
+    * interpreted scale-8 fold it replaced (test `FoldReferences.wdot`,
+    * equality property-locked in FunctionsAndSourcesSpec) but one tight
+    * loop per row instead of a Decimal allocation per element per plane. */
   def wdotExpr(vec: String, weights: String): Column =
     expr(s"decimal_wdot($vec, $weights)")
-
-  /** The interpreted scale-8 fold [[wdotExpr]] is proven against. */
-  def wdotFoldReference(vec: String, weights: String): Column = expr(
-    s"CAST(aggregate(zip_with($vec, $weights, " +
-      "(x, w) -> CAST(CAST(x AS DOUBLE) * w AS DECIMAL(20,8))), " +
-      "CAST(0 AS DECIMAL(30,8)), " +
-      "(acc, t) -> CAST(acc + t AS DECIMAL(30,8))) AS DOUBLE)")
 
   private def sqlDot(a: String, b: String): String =
     s"CAST(list_sum(list_transform(list_zip($a, $b), " +
@@ -134,7 +120,7 @@ object VectorOps {
     def proj(p: Int): String = {
       // D suffix: double literals (a bare 7.5 parses as DECIMAL(2,1));
       // the codegen'd decimal_wdot is bit-identical to the scale-8 fold
-      // this replaced (wdotFoldReference) and the oracle's strpos-on-md5
+      // this replaced (FoldReferences.wdot) and the oracle's strpos-on-md5
       // arithmetic — weights are k + 0.5 halves, exactly representable
       val w = (0 until dim).map(i => s"${weight(p, i)}D").mkString(", ")
       s"decimal_wdot(embedding, array($w))"
@@ -265,8 +251,8 @@ object VectorOps {
       .withColumn("_one", lit(1)))
     // native codegen'd distance table (r14; guide §4.2): one compiled
     // loop instead of the pqm × |cbs| × subdim interpreted HOF fold —
-    // bit-exact equivalence with [[pqDistsFoldReference]] pinned in
-    // ByteOpsSpec
+    // bit-exact equivalence with the fold (FoldReferences.pqDists in
+    // test sources) pinned in ByteOpsSpec
     val distsExpr = s"pq_dists(iv, cbs, $PqM, $PqSubDim)"
     ints.withColumn("_one", lit(1))
       .join(cb, "_one")
@@ -282,17 +268,6 @@ object VectorOps {
     * residual codebook `cbs` (native pq_dists — r14, guide §4.2). */
   private def residualDistsExpr: String =
     s"pq_dists(rv, cbs, $PqM, $PqSubDim)"
-
-  /** The interpreted HOF fold [[graft.functions.PqDists]] replaced and
-    * is proven against (ByteOpsSpec pins bit-exact equivalence,
-    * including slice/zip_with/aggregate NULL edge arithmetic). */
-  def pqDistsFoldReference(vec: String, pqm: Int, sub: Int): String =
-    s"transform(sequence(0, ${pqm - 1}), m -> " +
-      "transform(cbs, c -> struct(" +
-      s"aggregate(zip_with(slice($vec, m * $sub + 1, $sub), " +
-      s"slice(c.cv, m * $sub + 1, $sub), " +
-      "(x, y) -> (x - y) * (x - y)), CAST(0 AS BIGINT), " +
-      "(a, v) -> a + v) AS dist, c.cid AS cid)))"
 
   /** Shared residual-quantization intermediates (q_ann_pq_residual,
     * q_ann_ivfpq_residual): the scaled-int encodings, the per-cluster

@@ -117,7 +117,7 @@ class ByteOpsSpec extends SparkSpec {
 
   test("pq_dists reproduces the interpreted PQ distance-table fold on " +
       "random scaled vectors and on slice/NULL edge shapes") {
-    val hof = graft.operators.VectorOps.pqDistsFoldReference("iv", 8, 8)
+    val hof = FoldReferences.pqDists("iv", 8, 8)
     val base = spark.range(64)
       .withColumn("iv", expr(
         "transform(sequence(0, 63), i -> " +

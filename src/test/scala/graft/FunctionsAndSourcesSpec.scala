@@ -53,7 +53,7 @@ class FunctionsAndSourcesSpec extends SparkSpec {
       .crossJoin(e.select($"vec_id".as("ib"), $"embedding".as("eb")))
     val diff = pairs.select(
       expr("decimal_dot(ea, eb)").as("fast"),
-      graft.operators.VectorOps.dotFoldReference("ea", "eb").as("ref"))
+      FoldReferences.dot("ea", "eb").as("ref"))
       .filter(!($"fast" <=> $"ref"))
     assert(diff.count() == 0)
     // adversarial: rounding-boundary products, negatives, zeros, subnormal
@@ -68,7 +68,7 @@ class FunctionsAndSourcesSpec extends SparkSpec {
     val advDf = adv.toDF("a", "b")
     val advDiff = advDf.select(
       expr("decimal_dot(a, b)").as("fast"),
-      graft.operators.VectorOps.dotFoldReference("a", "b").as("ref"))
+      FoldReferences.dot("a", "b").as("ref"))
       .filter(!($"fast" <=> $"ref"))
     assert(advDiff.count() == 0)
     // large magnitudes: the fast path is restricted to |p| <= 1; bigger
@@ -88,7 +88,7 @@ class FunctionsAndSourcesSpec extends SparkSpec {
     try {
       val largeDiff = large.toDF("a", "b").select(
         expr("decimal_dot(a, b)").as("fast"),
-        graft.operators.VectorOps.dotFoldReference("a", "b").as("ref"))
+        FoldReferences.dot("a", "b").as("ref"))
         .filter(!($"fast" <=> $"ref"))
       assert(largeDiff.count() == 0)
     } finally spark.conf.set("spark.sql.ansi.enabled", prevAnsi)
@@ -134,7 +134,7 @@ class FunctionsAndSourcesSpec extends SparkSpec {
       val arr = w.map(x => s"${x}D").mkString("array(", ", ", ")")
       val diff = e.select(
         expr(s"decimal_wdot(v, $arr)").as("fast"),
-        graft.operators.VectorOps.wdotFoldReference("v", arr).as("ref"))
+        FoldReferences.wdot("v", arr).as("ref"))
         .filter(!($"fast" <=> $"ref"))
       assert(diff.count() == 0, s"weight family $fi diverged")
     }
@@ -150,7 +150,7 @@ class FunctionsAndSourcesSpec extends SparkSpec {
     adv.toDF("a", "b").createOrReplaceTempView("wdot_adv")
     val advDiff = spark.table("wdot_adv").select(
       expr("decimal_wdot(a, b)").as("fast"),
-      graft.operators.VectorOps.wdotFoldReference("a", "b").as("ref"))
+      FoldReferences.wdot("a", "b").as("ref"))
       .filter(!($"fast" <=> $"ref"))
     assert(advDiff.count() == 0)
     // overflow mirrors the fold: DECIMAL(20,8) term bound is 1e12
@@ -159,7 +159,7 @@ class FunctionsAndSourcesSpec extends SparkSpec {
     try {
       val big = Seq((Seq(1e6f), Seq(1e7))).toDF("a", "b").select(
         expr("decimal_wdot(a, b)").as("fast"),
-        graft.operators.VectorOps.wdotFoldReference("a", "b").as("ref"))
+        FoldReferences.wdot("a", "b").as("ref"))
         .collect()
       assert(big(0).isNullAt(0) && big(0).isNullAt(1))
     } finally spark.conf.set("spark.sql.ansi.enabled", prevAnsi)

@@ -273,6 +273,64 @@ class MqttSpec extends AnyFunSuite {
     }
   }
 
+  test("retained publish is stored before its PUBACK (spec §4.3.2): a " +
+      "subscriber that subscribes right after a QoS 1 retained publish " +
+      "is acknowledged is primed with that value, every time") {
+    withBroker { b =>
+      def connect(id: String): Socket = {
+        val s = new Socket("127.0.0.1", b.boundPort)
+        s.setTcpNoDelay(true)
+        s.setSoTimeout(5000)
+        s.getOutputStream.write(Mqtt.packet(Mqtt.CONNECT << 4,
+          Mqtt.utf8("MQTT") ++ Array[Byte](4, 2, 0, 60) ++ Mqtt.utf8(id)))
+        s.getOutputStream.flush()
+        assert(Mqtt.readPacket(s.getInputStream)._2(1) == 0)
+        s
+      }
+      // raw publisher: its PUBACK is read on this thread, so the
+      // SUBSCRIBE below follows the ack with no thread hand-off between
+      val pub = connect("race-pub")
+      val rounds = 2000
+      val stale = Seq.newBuilder[(Int, String)]
+      (1 to rounds).foreach { i =>
+        // connected before the publish so only the SUBSCRIBE races it
+        val sub = connect(s"race-sub-$i")
+        try {
+          pub.getOutputStream.write(Mqtt.publishPacket("graft/race/t",
+            s"v$i".getBytes(UTF_8), qos = 1, packetId = 1 + i % 65535,
+            dup = false, retain = true))
+          pub.getOutputStream.flush()
+          assert((Mqtt.readPacket(pub.getInputStream)._1 >> 4)
+            == Mqtt.PUBACK)
+          // QoS 0 subscription: the retained copy arrives without an id
+          sub.getOutputStream.write(Mqtt.packet((Mqtt.SUBSCRIBE << 4) | 2,
+            Array[Byte](0, 1) ++ Mqtt.utf8("graft/race/t") :+ 0.toByte))
+          sub.getOutputStream.flush()
+          var primed: Option[String] = None
+          while (primed.isEmpty) {
+            val (h, body) = Mqtt.readPacket(sub.getInputStream)
+            if ((h >> 4) == Mqtt.SUBACK) {
+              // the retained copy trails the SUBACK on the broker's
+              // socket; a PINGREQ acks the SUBACK segment at once, so
+              // the copy is not held back by delayed-ACK coalescing
+              sub.getOutputStream.write(
+                Array[Byte]((Mqtt.PINGREQ << 4).toByte, 0))
+              sub.getOutputStream.flush()
+            } else if ((h >> 4) == Mqtt.PUBLISH) {
+              val (_, o) = Mqtt.readStr(body, 0)
+              primed = Some(new String(body, o, body.length - o, UTF_8))
+            }
+          }
+          if (!primed.contains(s"v$i")) stale += ((i, primed.get))
+        } finally sub.close()
+      }
+      val bad = stale.result()
+      assert(bad.isEmpty, s"${bad.size} of $rounds late subscribers were " +
+        s"primed with a stale retained value, e.g. ${bad.take(5)}")
+      pub.close()
+    }
+  }
+
   test("retained-topic cap: the publish creating topic 4097 fails its " +
       "connection loudly (no unbounded broker memory), overwrites under " +
       "the cap still succeed, and the broker keeps serving others") {

@@ -274,7 +274,7 @@ class OperatorsSpec extends SparkSpec {
         .setScale(7, BigDecimal.RoundingMode.HALF_UP)
         * BigDecimal(10000000)).toLongExact)
     val sv = vecs.map { case (id, v) => id -> scaled(v) }.toMap
-    // exact-decimal cosine, as dotFoldReference: double products rounded
+    // exact-decimal cosine, as FoldReferences.dot: double products rounded
     // to scale 10, exact accumulation
     def dot(a: Array[Float], b: Array[Float]): BigDecimal =
       a.zip(b).map { case (x, y) =>
