@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Table loaders shared by every operator. One parquet file per table
   * (TESTDATA.md); at production scale these would be partitioned
@@ -78,24 +77,32 @@ object Tables {
   * This also makes every aggregation safe under AQE re-partitioning,
   * speculative re-execution and partial (map-side) aggregation at cluster
   * scale: the result does not depend on partitioning or merge order.
+  *
+  * DataFrame code has one way to sum exactly: [[exactSum]] (and [[dsum]],
+  * [[davg]], [[dsumProd4]] built on the same accumulator), whose overflow
+  * checks hold with `spark.sql.ansi.enabled` on or off. The `sql*`
+  * mirrors are SQL text for the queries that run on both engines.
   */
 object Det {
-  /** Order-insensitive exact sum of a double column, emitted as DOUBLE.
-    * Oracle mirror: [[sqlDsum]].
-    *
-    * r14 (verdict item 5, §7.4-preserving): the accumulator is
-    * [[graft.functions.Sum128]] — the identical per-row
-    * cast-to-DECIMAL(18,scale) rounding, scaled to an exact BIGINT and
-    * summed in a two-long 128-bit buffer with checked overflow, instead
-    * of SUM over a DECIMAL(28,scale) buffer whose >18-digit precision
-    * serializes a BigDecimal per update (measured in r13: ~0.2 s per
-    * aggregate per 600k rows). Same exact total, same NULL behavior,
-    * same final DECIMAL→DOUBLE conversion — value-identical by
-    * construction and property-pinned in Sum128Spec; the oracle mirror
-    * is untouched. */
+  /** THE DataFrame exact sum: each addend rounds to DECIMAL(18, scale),
+    * and the total accumulates exactly on [[graft.functions.Sum128]]'s
+    * two-long 128-bit buffer, emitted as DECIMAL(28, scale) — the type
+    * `sum(x.cast(DecimalType(18, scale)))` gives, so a call site that
+    * keeps the decimal (a day sum `yd`, `sv`) has an unchanged schema.
+    * A bare aggregate, so `.over(w)` applies to it. Every overflow
+    * throws whatever `spark.sql.ansi.enabled` says: an addend outside
+    * DECIMAL(18, scale) (the per-row cast is `checked_decimal`), the
+    * 128-bit buffer (checked high-limb adds) and a total past 28 digits
+    * (the finalizer). With ANSI off, Spark's own SUM/CAST would return
+    * NULL instead. Exact, so the result does not depend on partitioning
+    * or merge order. Oracle mirror: `SUM(CAST(x AS DECIMAL(18,s)))`. */
+  def exactSum(c: Column, scale: Int = 4): Column =
+    call_function("sum128", checkedDecimal(c, 18, scale))
+
+  /** [[exactSum]] as a DOUBLE — the correctly rounded value of the exact
+    * total. Oracle mirror: [[sqlDsum]]. */
   def dsum(c: Column, scale: Int = 4): Column =
-    call_function("sum128", c.cast(DecimalType(18, scale)))
-      .cast("double")
+    exactSum(c, scale).cast("double")
 
   /** Deterministic average: exact decimal sum cast to double, divided by
     * the (exact) count. Oracle mirror: [[sqlDavg]]. */
@@ -110,18 +117,23 @@ object Det {
     * (r14, same Sum128Spec pin as dsum). Domain: the scaled-long
     * product needs |x·y| < 9.2e10 and |y| < 9.2e14 per ROW — four-plus
     * orders of magnitude above any fixture/TPC-H money×quantity value;
-    * a violating row fails loudly under ANSI instead of silently. */
+    * a violating row throws under any session config. */
   def dsumProd4(x: Column, y: Column): Column = {
     // factors round at scale 4 exactly as in the decimal form;
     // unscaled() is a free field read of each factor's scaled units, so
     // the per-row path is two casts + ONE long multiply (no BigDecimal
     // anywhere). The product v = x4·y4 = (x·y)·10^8 is exact while
     // |x·y| < 9.2e10 (a money×money square peaks ~1.1e10 on TPC-H-ish
-    // domains) — past it the long arithmetic fails loudly under ANSI
-    val xs = call_function("unscaled", x.cast(DecimalType(18, 4)))
-    val ys = call_function("unscaled", y.cast(DecimalType(19, 4)))
-    call_function("sum128", xs * ys, lit(8)).cast("double")
+    // domains) — past it checked_mul throws rather than wrapping
+    val xs = call_function("unscaled", checkedDecimal(x, 18, 4))
+    val ys = call_function("unscaled", checkedDecimal(y, 19, 4))
+    call_function("sum128", call_function("checked_mul", xs, ys), lit(8))
+      .cast("double")
   }
+
+  /** `c` cast to DECIMAL(p, s), throwing on overflow under any config. */
+  private def checkedDecimal(c: Column, p: Int, s: Int): Column =
+    call_function("checked_decimal", c, lit(p), lit(s))
 
   /** SQL (DuckDB) mirror of [[dsum]]. The DOUBLE conversion routes
     * through VARCHAR: DuckDB's direct DECIMAL→DOUBLE cast computes

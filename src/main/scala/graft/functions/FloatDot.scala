@@ -2,10 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal, UnscaledValue}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, EvalMode, Expression, ExpressionInfo, Literal, Multiply, UnscaledValue}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DecimalType, DoubleType, FloatType}
 
 /** Native codegen'd dot product over two `array<float>` columns.
   *
@@ -108,6 +108,21 @@ object GraftFunctions {
     (new FunctionIdentifier("unscaled"),
       new ExpressionInfo(classOf[UnscaledValue].getName, "unscaled"),
       (children: Seq[Expression]) => UnscaledValue(children(0))),
+    // The exact-sum path's per-row steps with the eval mode fixed to
+    // ANSI rather than read from spark.sql.ansi.enabled, which the
+    // Column API cannot express: checked_decimal(x, p, s) is CAST(x AS
+    // DECIMAL(p, s)) that throws instead of nulling out of range, and
+    // checked_mul(a, b) is a multiply that throws instead of wrapping.
+    (new FunctionIdentifier("checked_decimal"),
+      new ExpressionInfo(classOf[Cast].getName, "checked_decimal"),
+      (children: Seq[Expression]) => Cast(children(0),
+        DecimalType(children(1).eval().asInstanceOf[Int],
+          children(2).eval().asInstanceOf[Int]),
+        None, EvalMode.ANSI)),
+    (new FunctionIdentifier("checked_mul"),
+      new ExpressionInfo(classOf[Multiply].getName, "checked_mul"),
+      (children: Seq[Expression]) =>
+        Multiply(children(0), children(1), EvalMode.ANSI)),
     (new FunctionIdentifier("sum128"),
       new ExpressionInfo(classOf[Sum128].getName, "sum128"),
       (children: Seq[Expression]) =>

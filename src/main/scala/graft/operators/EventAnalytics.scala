@@ -123,7 +123,6 @@ object EventAnalytics {
     * which keeps a 1-hour per-key buffer instead of the window. Unsorted;
     * the declared query adds its ORDER BY. */
   def trailingHour(events: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     val w = Window.partitionBy("user_id").orderBy(col("tsu"))
       .rangeBetween(-3600L * 1000000L, 0L)
     events
@@ -131,8 +130,7 @@ object EventAnalytics {
         unix_micros(col("ts")).as("tsu"), col("value"))
       .withColumn("n_1h", count(lit(1)).over(w))
       .withColumn("sum_1h",
-        sum(col("value").cast(DecimalType(18, 4))).over(w)
-          .cast("double"))
+        Det.exactSum(col("value")).over(w).cast("double"))
       .select("user_id", "event_id", "tsu", "n_1h", "sum_1h")
   }
 
@@ -170,7 +168,7 @@ object EventAnalytics {
     * identical to the batch frame). */
   def dailyPoints(events: DataFrame): DataFrame =
     events.groupBy(to_date(col("ts")).as("day"))
-      .agg(sum(col("value").cast(DecimalType(18, 4))).as("yd"),
+      .agg(Det.exactSum(col("value")).as("yd"),
         count(lit(1)).as("n_events"))
 
   /** Per-(event_type, day) exact-decimal value sums — the Theil–Sen
@@ -183,7 +181,7 @@ object EventAnalytics {
   def theilSenDaily(events: DataFrame): DataFrame =
     events.filter(col("value").isNotNull)
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(sum(col("value").cast(DecimalType(18, 4))).as("yd"))
+      .agg(Det.exactSum(col("value")).as("yd"))
 
   /** Theil–Sen assembly from a (event_type, day, yd) daily frame — see
     * the q_ts_theil_sen entry for the exactness and scale argument. */
@@ -455,8 +453,7 @@ object EventAnalytics {
       val wc = Window.partitionBy("cohort_w").orderBy("week_idx")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       grid.withColumn("cum_ltv",
-        sum(col("week_rev").cast(org.apache.spark.sql.types
-          .DecimalType(18, 4))).over(wc).cast("double"))
+        Det.exactSum(col("week_rev")).over(wc).cast("double"))
         .orderBy(asc_nulls_last("cohort_w"), asc_nulls_last("week_idx"))
     }),
 
@@ -552,7 +549,6 @@ object EventAnalytics {
     // bits on both engines. Two windowed passes + two slim aggregates,
     // all partitioned by event_type.
     "q_anomaly_mad" -> ((s, d) => {
-      import org.apache.spark.sql.types.DecimalType
       val ev = t(s, d, "events")
         .select(col("event_type"), col("event_id"), col("value"))
       val wn = Window.partitionBy("event_type")
@@ -564,8 +560,7 @@ object EventAnalytics {
           .filter(col("rn") === floor((col("n") + 1) / 2)
             || col("rn") === floor((col("n") + 2) / 2))
           .groupBy("event_type")
-          .agg((sum(col(c).cast(DecimalType(18, scale))).cast("double")
-            / count(lit(1))).as(as))
+          .agg((Det.dsum(col(c), scale) / count(lit(1))).as(as))
       }
       val med = median(ev, "value", 4, "med")
       // r14 (verdict item 8, guide §2.4): dev has TWO consumers — the
@@ -800,7 +795,7 @@ object EventAnalytics {
     "q_ts_mann_kendall" -> ((s, d) => {
       val daily = t(s, d, "events")
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(sum(col("value").cast(DecimalType(18, 4))).as("yd"))
+        .agg(Det.exactSum(col("value")).as("yd"))
       val sgn = daily
         .join(daily.select(col("event_type"), col("day").as("day2"),
           col("yd").as("yd2")), Seq("event_type"))
@@ -878,8 +873,7 @@ object EventAnalytics {
           .withColumn("_one", lit(1)).join(n, "_one")
           .filter(col("rn") === floor((col("n") + 1) / 2)
             || col("rn") === floor((col("n") + 2) / 2))
-          .agg((sum(col(c).cast(DecimalType(18, 7))).cast("double")
-            / count(lit(1))).as(as))
+          .agg((Det.dsum(col(c), 7) / count(lit(1))).as(as))
           .withColumn("_one", lit(1))
       }
       val dev = dec.withColumn("_one", lit(1))
@@ -1040,7 +1034,7 @@ object EventAnalytics {
       val dec = "DECIMAL(38,0)"
       val daily = t(s, d, "events")
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(sum(col("value").cast(DecimalType(18, 4))).as("sv"))
+        .agg(Det.exactSum(col("value")).as("sv"))
       val tot = broadcast(daily.groupBy("event_type")
         .agg(count(lit(1)).as("nd"), sum("sv").as("stot")))
       val w = Window.partitionBy("event_type").orderBy("day")
@@ -1229,7 +1223,7 @@ object EventAnalytics {
     "q_ts_max_drawdown" -> ((s, d) => {
       val daily = t(s, d, "events")
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(sum(col("value").cast(DecimalType(18, 4))).as("sv"))
+        .agg(Det.exactSum(col("value")).as("sv"))
       val tot = broadcast(daily.groupBy("event_type")
         .agg(count(lit(1)).as("nd"), sum("sv").as("stot")))
       val wCum = Window.partitionBy("event_type")
@@ -1896,7 +1890,7 @@ object EventAnalytics {
     "q_changepoint" -> ((s, d) => {
       val daily = t(s, d, "events")
         .groupBy(to_date(col("ts")).as("day"))
-        .agg(sum(col("value").cast(DecimalType(18, 4))).as("s"))
+        .agg(Det.exactSum(col("value")).as("s"))
       val w = Window.orderBy(asc_nulls_last("day"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val tot = broadcast(daily.agg(count(lit(1)).as("nd"),
@@ -1920,7 +1914,7 @@ object EventAnalytics {
     "q_ts_cusum" -> ((s, d) => {
       val daily = t(s, d, "events")
         .groupBy(to_date(col("ts")).as("day"))
-        .agg(sum(col("value").cast(DecimalType(18, 4))).as("s"))
+        .agg(Det.exactSum(col("value")).as("s"))
       val w = Window.orderBy(asc_nulls_last("day"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val tot = broadcast(daily.agg(count(lit(1)).as("nd"),

@@ -4,7 +4,6 @@ import graft.CacheScope.ScopedPersist
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.DecimalType
 import graft.{Det, Tables}
 
 /** Extended relational surface: SQL-text entry (multi-join analytics the
@@ -451,8 +450,7 @@ object Extended {
       t(s, d, "orders")
         .select("o_custkey", "o_orderkey", "o_totalprice")
         .withColumn("near_sum",
-          sum(col("o_totalprice").cast(DecimalType(18, 4))).over(w)
-            .cast("double"))
+          Det.exactSum(col("o_totalprice")).over(w).cast("double"))
         .withColumn("near_n", count(lit(1)).over(w))
         .orderBy(asc_nulls_last("o_custkey"), asc_nulls_last("o_orderkey"))
     }),
@@ -668,8 +666,8 @@ object Extended {
         .filter(col("rn") === floor((col("n") + 1) / 2)
           || col("rn") === floor((col("n") + 2) / 2))
         .groupBy("o_orderstatus")
-        .agg((sum(col("o_totalprice").cast(DecimalType(18, 4)))
-          .cast("double") / count(lit(1))).as("median_price"))
+        .agg((Det.dsum(col("o_totalprice")) / count(lit(1)))
+          .as("median_price"))
         .orderBy(asc_nulls_last("o_orderstatus"))
     }),
 

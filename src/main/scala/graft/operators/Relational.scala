@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.DecimalType
 import graft.{Det, Tables}
 
 /** Core relational operators: scans, filters, joins, aggregations, window
@@ -24,7 +23,6 @@ import graft.{Det, Tables}
   */
 object Relational {
   private def t(s: SparkSession, d: String, n: String) = Tables.table(s, d, n)
-  private def dec(scale: Int) = DecimalType(18, scale)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- scans ---------------------------------------------------------
@@ -442,9 +440,9 @@ object Relational {
       t(s, d, "events")
         .select("event_id", "user_id", "ts", "value")
         .withColumn("running_sum",
-          sum(col("value").cast(dec(4))).over(wRun).cast("double"))
+          Det.exactSum(col("value")).over(wRun).cast("double"))
         .withColumn("moving_avg",
-          sum(col("value").cast(dec(4))).over(wMov).cast("double")
+          Det.exactSum(col("value")).over(wMov).cast("double")
             / count(lit(1)).over(wMov))
         .orderBy(asc_nulls_last("event_id"))
     }),

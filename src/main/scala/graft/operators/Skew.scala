@@ -44,7 +44,7 @@ object Skew {
     val partial = salted
       .groupBy((keys :+ "_salt").map(col): _*)
       .agg(count(lit(1)).as("_n"),
-        sum(col(valueCol).cast("decimal(18,4)")).as("_s"))
+        graft.Det.exactSum(col(valueCol)).as("_s"))
     partial
       .groupBy(keys.map(col): _*)
       .agg(sum(col("_n")).as("n"),

@@ -274,6 +274,12 @@ object StatsTests {
       .agg(sum("cnt").as("n_events"),
         max("lo_val").as("lo_val"),
         max("hi_val").as("hi_val"),
+        // Not on Det's sum128 path: its scaled-long form would be a
+        // multiplicity × unscaled value product, and a DECIMAL(18,4)
+        // value near its 1e14 bound (1e18 units) times a multiplicity of
+        // 10 already passes 2^63, so the product does not provably fit
+        // a long. The DECIMAL(38,4) sum below cannot overflow on any
+        // input Spark can hold (it needs ~1e20 rows).
         (sum(col("below") * col("lo_val").cast(DecimalType(18, 4))
           + col("mid") * col("value").cast(DecimalType(18, 4))
           + col("above") * col("hi_val").cast(DecimalType(18, 4)))
@@ -1201,7 +1207,7 @@ object StatsTests {
       val daily = t(s, d, "events")
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("cnt"),
-          sum(col("value").cast(DecimalType(18, 4))).as("sv"))
+          Det.exactSum(col("value")).as("sv"))
       val pairs = daily
         .join(daily.select(col("event_type"), col("day").as("day2"),
           col("cnt").as("cnt2"), col("sv").as("sv2")), Seq("event_type"))

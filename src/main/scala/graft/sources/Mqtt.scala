@@ -211,6 +211,9 @@ final class MqttBroker(port: Int = 0) {
     while (running) {
       try {
         val sock = server.accept()
+        // small packets go out at once: without this, a SUBACK and the
+        // retained PUBLISH behind it wait ~40 ms on the peer's delayed ACK
+        sock.setTcpNoDelay(true)
         val conn = new Conn(sock)
         conns.add(conn)
         val t = new Thread(() => serve(conn), "graft-mqtt-conn")
@@ -417,6 +420,7 @@ final class MqttClient(host: String, port: Int,
   import Mqtt._
 
   private val sock = new Socket(host, port)
+  sock.setTcpNoDelay(true) // see MqttBroker's accept loop
   private val out = sock.getOutputStream
   private val in = sock.getInputStream
   private val subs = new java.util.concurrent.CopyOnWriteArrayList[

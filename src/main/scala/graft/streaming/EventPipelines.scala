@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -13,9 +13,10 @@ import graft.operators.StreamShapes
   * `nyuki/bus/mqtt.py`, tukio engine; mount empty, SURVEY.md §0).
   *
   * Mapping of reference semantics:
-  *  - bus subscribe (R1)  → file-source replay of events parquet (no
-  *    broker ships in this image; swapping in a Kafka source is a 1-line
-  *    change because everything downstream is a DataFrame transform);
+  *  - bus subscribe (R1)  → any [[graft.sources.Sources.BusSource]]: the
+  *    MQTT 3.1.1 bus ([[graft.sources.MqttBus]], one input partition per
+  *    lane), a file replay ([[graft.sources.Sources.FileReplayBus]]) or
+  *    a Kafka source; everything downstream is a DataFrame transform;
   *  - at-least-once replay + persistence (R2) → checkpointed exactly-once
   *    sinks + `dropDuplicatesWithinWatermark` on event_id;
   *  - trigger match (R3) → filter predicates routing into per-template
@@ -26,13 +27,14 @@ import graft.operators.StreamShapes
   *    construction, verified by MemoryStream tests.
   *
   * Scale: state is keyed by (window/session, key) so it spreads across
-  * executors; the watermark bounds state size; file→Kafka source swap and
-  * sink fan-out are the only cluster-specific pieces.
+  * executors; the watermark bounds state size; the bus source and sink
+  * fan-out are the only cluster-specific pieces.
   */
 object EventPipelines {
 
-  /** Schema of the events stream (ts already µs; streaming sources read
-    * the parquet written by [[replayPrep]], not the raw NANOS file). */
+  /** Schema of the events stream (ts already µs: a file-replay source
+    * reads parquet republished through [[graft.Tables.table]], not the
+    * raw NANOS file). */
   val eventSchema: StructType = StructType(Seq(
     StructField("event_id", LongType),
     StructField("ts", TimestampType),
@@ -40,24 +42,6 @@ object EventPipelines {
     StructField("event_type", StringType),
     StructField("value", DoubleType),
     StructField("props", StringType)))
-
-  /** One-off batch job that republishes the raw events table as a
-    * stream-readable directory (µs timestamps, N files = N replay
-    * micro-batch splits). This stands in for the bus producer. */
-  def replayPrep(spark: SparkSession, sfDir: String, outDir: String,
-      files: Int = 8): Unit =
-    graft.Tables.table(spark, sfDir, "events")
-      .repartition(files)
-      .write.mode("overwrite").parquet(outDir)
-
-  /** R1: subscribe — maxFilesPerTrigger throttles replay into multiple
-    * micro-batches like a live feed. */
-  def source(spark: SparkSession, dir: String,
-      maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream
-      .schema(eventSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(dir)
 
   /** R2: replay dedup within the watermark (bus at-least-once → effectively
     * exactly-once past the watermark horizon). */

@@ -79,11 +79,14 @@ class DedupPipelineSpec extends SparkSpec {
     val srcDir = s"$tmp/src"
     val outDir = s"$tmp/out"
     val ckpt = s"$tmp/ckpt"
-    EventPipelines.replayPrep(spark, sf, srcDir, files = 4)
+    // the bus producer: events republished as 4 µs-timestamp files,
+    // replayed one file per micro-batch
+    Tables.table(spark, sf, "events").repartition(4)
+      .write.mode("overwrite").parquet(srcDir)
     def runOnce(): Unit = {
       val q = EventPipelines.sink(
           EventPipelines.trigger(
-            EventPipelines.source(spark, srcDir, maxFilesPerTrigger = 1),
+            graft.sources.Sources.FileReplayBus(srcDir).subscribe(spark),
             "purchase"),
           outDir, ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

@@ -60,28 +60,45 @@ class DeterminismSpec extends SparkSpec {
     "q_ts_max_drawdown")      // partitioned prefix windows, exact grid
 
   sensitive.foreach { name =>
+    // the name predates the ANSI-off and AQE-off sides; kept stable
     test(s"$name is identical at shuffle.partitions 3 vs 13") {
       assertPartitionInvariant(name)
     }
   }
 
+  /** Runs `name` at 3 shuffle partitions (the reference side), at 13,
+    * and at 3 with `spark.sql.ansi.enabled` off and with
+    * `spark.sql.adaptive.enabled` off; every side must equal the
+    * reference. */
   private def assertPartitionInvariant(name: String): Unit = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      // NamedStages survive across queries by design; here each side
-      // must REBUILD its shared stages under its own partition setting
-      // or the invariance check is vacuous for the cached subtree
-      // (r11 ADVICE: nearDupCands built at 3 partitions would be read
-      // verbatim by the 13-partition run).
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.ansi.enabled",
+      "spark.sql.adaptive.enabled")
+    val prev = keys.map(k => k -> spark.conf.get(k))
+    def run(conf: (String, String)*): Seq[org.apache.spark.sql.Row] = {
+      prev.foreach { case (k, v) => spark.conf.set(k, v) }
       spark.conf.set("spark.sql.shuffle.partitions", "3")
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      // NamedStages survive across queries by design; here each side
+      // must REBUILD its shared stages under its own setting or the
+      // invariance check is vacuous for the cached subtree (r11 ADVICE:
+      // nearDupCands built at 3 partitions would be read verbatim by the
+      // 13-partition run).
       NamedStages.clearAll(spark)
-      val a = SparkEntry.queries(name)(spark, sf).collect().toSeq
-      spark.conf.set("spark.sql.shuffle.partitions", "13")
-      NamedStages.clearAll(spark)
-      val b = SparkEntry.queries(name)(spark, sf).collect().toSeq
-      assert(a == b, s"$name changed under repartitioning")
+      SparkEntry.queries(name)(spark, sf).collect().toSeq
+    }
+    try {
+      val a = run()
+      val failures = Seq(
+        "repartitioning" -> Seq("spark.sql.shuffle.partitions" -> "13"),
+        "ANSI off" -> Seq("spark.sql.ansi.enabled" -> "false"),
+        "AQE off" -> Seq("spark.sql.adaptive.enabled" -> "false")
+      ).flatMap { case (side, conf) =>
+        try if (run(conf: _*) == a) None else Some(s"changed under $side")
+        catch { case e: Exception => Some(s"threw under $side: $e") }
+      }
+      assert(failures.isEmpty, s"$name ${failures.mkString("; ")}")
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
+      prev.foreach { case (k, v) => spark.conf.set(k, v) }
       NamedStages.clearAll(spark)
     }
   }

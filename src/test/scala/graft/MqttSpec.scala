@@ -331,6 +331,42 @@ class MqttSpec extends AnyFunSuite {
     }
   }
 
+  test("SUBSCRIBE → SUBACK + retained PUBLISH is not held back by the " +
+      "subscriber's delayed ACK: median round well under 40 ms over 50 " +
+      "rounds") {
+    withBroker { b =>
+      val pub = new MqttClient("127.0.0.1", b.boundPort, "nodelay-pub")
+        .connect()
+      pub.publish("graft/nodelay/t", "v".getBytes(UTF_8), qos = 1,
+        retain = true)
+      val rounds = 50
+      val ms = (1 to rounds).map { i =>
+        val s = new Socket("127.0.0.1", b.boundPort)
+        try {
+          // only the broker's two back-to-back writes are under test
+          s.setTcpNoDelay(true)
+          s.setSoTimeout(5000)
+          val (out, in) = (s.getOutputStream, s.getInputStream)
+          out.write(Mqtt.packet(Mqtt.CONNECT << 4, Mqtt.utf8("MQTT") ++
+            Array[Byte](4, 2, 0, 60) ++ Mqtt.utf8(s"nodelay-sub-$i")))
+          out.flush()
+          assert(Mqtt.readPacket(in)._2(1) == 0)
+          val t0 = System.nanoTime()
+          out.write(Mqtt.packet((Mqtt.SUBSCRIBE << 4) | 2,
+            Array[Byte](0, 1) ++ Mqtt.utf8("graft/nodelay/t") :+ 0.toByte))
+          out.flush()
+          assert((Mqtt.readPacket(in)._1 >> 4) == Mqtt.SUBACK)
+          assert((Mqtt.readPacket(in)._1 >> 4) == Mqtt.PUBLISH)
+          (System.nanoTime() - t0) / 1e6
+        } finally s.close()
+      }
+      val median = ms.sorted.apply(rounds / 2)
+      assert(median < 10.0, f"median SUBSCRIBE round $median%.1f ms; " +
+        s"rounds (ms): ${ms.map(m => f"$m%.1f").mkString(" ")}")
+      pub.disconnect()
+    }
+  }
+
   test("retained-topic cap: the publish creating topic 4097 fails its " +
       "connection loudly (no unbounded broker memory), overwrites under " +
       "the cap still succeed, and the broker keeps serving others") {

@@ -1,6 +1,14 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BindReferences, Expression, Literal, UnsafeProjection}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DecimalType, LongType}
+
+import graft.functions.Sum128
 
 /** r14 equivalence pins for [[graft.functions.Sum128]] — the two-long
   * 128-bit accumulator behind Det.dsum must produce the IDENTICAL value
@@ -117,6 +125,117 @@ class Sum128Spec extends SparkSpec {
       assert(fresh.catalog.functionExists(name), s"$name unresolved")
       assert(fresh.catalog.getFunction(name).className == info.getClassName,
         s"$name resolves to the wrong class")
+    }
+  }
+
+  test("Det.exactSum has SUM(DECIMAL(18,s))'s type and value, grouped " +
+      "and over a sliding window frame") {
+    val ev = Tables.table(spark, sf, "events")
+    def ref = sum(col("value").cast(DecimalType(18, 4)))
+    val g = ev.groupBy("event_type")
+      .agg(Det.exactSum(col("value")).as("nat"), ref.as("ref"))
+    assert(g.schema("nat").dataType == DecimalType(28, 4))
+    assert(g.schema("ref").dataType == DecimalType(28, 4))
+    val w = Window.partitionBy("user_id").orderBy("event_id")
+      .rowsBetween(-6, 0)
+    val rows = g.collect().toSeq ++ ev.select(lit("w"),
+      Det.exactSum(col("value")).over(w), ref.over(w)).collect()
+    assert(rows.size > 10)
+    rows.foreach(r => assert(r.get(1) == r.get(2), s"$r"))
+  }
+
+  // ---- overflow throws with spark.sql.ansi.enabled=false -------------
+  // Spark's own SUM, CAST and long arithmetic return NULL or wrap with
+  // ANSI off; the exact-sum path fixes its eval mode instead.
+
+  /** `f` with an ANSI-off session active, so expressions built inside
+    * read `spark.sql.ansi.enabled=false` from SQLConf.get. */
+  private def withAnsiOff[T](f: SparkSession => T): T = {
+    val off = spark.newSession()
+    off.conf.set("spark.sql.ansi.enabled", "false")
+    SparkSession.setActiveSession(off)
+    try {
+      assert(!SQLConf.get.ansiEnabled)
+      f(off)
+    } finally SparkSession.setActiveSession(spark)
+  }
+
+  private def arithmeticCause(e: Throwable): Boolean =
+    e != null && (e.isInstanceOf[ArithmeticException] ||
+      arithmeticCause(e.getCause))
+
+  /** Evaluates `e` over `row`, interpreted and as generated code; both
+    * must throw an ArithmeticException. */
+  private def assertThrows(e: Expression, attrs: Seq[Attribute],
+      row: InternalRow): Unit = {
+    intercept[ArithmeticException](
+      BindReferences.bindReference(e, attrs).eval(row))
+    intercept[ArithmeticException](
+      UnsafeProjection.create(Seq(e), attrs).apply(row))
+  }
+
+  test("ANSI off: Det.dsumProd4 throws on a row whose scaled product " +
+      "passes 2^63") {
+    withAnsiOff { off =>
+      // 1e7 · 1e7 at scale 4 each: 1e11 · 1e11 = 1e22 units > 9.2e18
+      val df = off.createDataFrame(Seq((1.0e7, 1.0e7), (1.0, 2.0)))
+        .toDF("x", "y")
+      val e = intercept[Exception](
+        df.agg(Det.dsumProd4(col("x"), col("y"))).collect())
+      assert(arithmeticCause(e), s"not an overflow: $e")
+    }
+  }
+
+  test("ANSI off: Det.dsum throws on an addend outside DECIMAL(18,s)") {
+    withAnsiOff { off =>
+      // 1e15 needs 16 integer digits; DECIMAL(18,4) holds 14
+      val df = off.createDataFrame(Seq(Tuple1(1.0e15), Tuple1(1.0)))
+        .toDF("x")
+      val e = intercept[Exception](df.agg(Det.dsum(col("x"))).collect())
+      assert(arithmeticCause(e), s"not an overflow: $e")
+    }
+  }
+
+  test("ANSI off: sum128's high-limb add throws on overflow (crafted " +
+      "buffer rows; real data needs ~2^64 rows)") {
+    withAnsiOff { _ =>
+      val v = AttributeReference("v", LongType, nullable = false)()
+      val agg = Sum128(v, Literal(0))
+      // update: hi = Long.MaxValue, lo = 2^64 − 1, v = 1 — the low-limb
+      // carry pushes hi past 2^63 − 1
+      assertThrows(agg.updateExpressions.head, agg.aggBufferAttributes :+ v,
+        InternalRow(Long.MaxValue, -1L, true, 1L))
+      // merge: hi + hi' = Long.MaxValue + 1
+      assertThrows(agg.mergeExpressions.head,
+        agg.aggBufferAttributes ++ agg.inputAggBufferAttributes,
+        InternalRow(Long.MaxValue, 0L, true, 1L, 0L, true))
+    }
+  }
+
+  test("ANSI off: an exact sum past DECIMAL(28,s) throws (crafted " +
+      "buffer; DECIMAL(18,s) addends need ~1e10 rows to get there)") {
+    withAnsiOff { _ =>
+      val d = AttributeReference("d", DecimalType(18, 4))()
+      val agg = Sum128(d, Literal(null))
+      def buffer(units: BigInt) =
+        InternalRow((units >> 64).toLong, units.toLong, true)
+      // 10^28 units at scale 4 = 1e24: one digit past DECIMAL(28,4)
+      val units = BigInt(10).pow(28)
+      assertThrows(agg.evaluateExpression, agg.aggBufferAttributes,
+        buffer(units))
+      assertThrows(agg.evaluateExpression, agg.aggBufferAttributes,
+        buffer(-units))
+      // the largest total that fits comes back exactly, and so do
+      // totals on the one-long path (|units| < 2^63)
+      val eval = BindReferences.bindReference(agg.evaluateExpression,
+        agg.aggBufferAttributes)
+      Seq(units - 1 -> ("9" * 24 + "." + "9" * 4),
+        BigInt(Long.MaxValue) -> "922337203685477.5807",
+        BigInt(Long.MinValue) -> "-922337203685477.5808",
+        BigInt(-12345678) -> "-1234.5678"
+      ).foreach { case (u, want) =>
+        assert(eval.eval(buffer(u)).toString == want, s"$u units")
+      }
     }
   }
 }
