@@ -15,8 +15,11 @@ import graft.streaming.NearDupStream
   * the full [[NearDupStream.nearDupPairsStream]] ingestion pipeline
   * (signatures → band-bucket keyed state → pair dedup → exact-Jaccard
   * verify) → discovered pairs published BACK to the broker through
-  * [[MqttSink]] (per-partition executor-side QoS 1), counted by an
-  * independent subscriber.
+  * [[MqttSink]] (per partition on the executors: each pair's `to_json`
+  * bytes, built in the plan, sent at QoS 1 through
+  * [[MqttClient.publishAll]]'s window of unacknowledged PUBLISHes),
+  * counted by an independent subscriber. The producers publish one
+  * document at a time, each waiting for its PUBACK.
   *
   * Reports docs/second from first publish to the last doc landing in
   * the pipeline, per lane count: does the WHOLE ingest chain scale with

@@ -3,7 +3,8 @@ package graft.sources
 import java.io.{EOFException, IOException, InputStream, OutputStream}
 import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch,
+  LinkedBlockingQueue, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.concurrent.TrieMap
@@ -70,6 +71,14 @@ object Mqtt {
 
   /** QoS 1 retransmit cadence. */
   val RetransmitMs = 500L
+
+  /** Retransmits of one QoS 1 PUBLISH before the client gives up. */
+  val MaxRetransmits = 20
+
+  /** Most QoS 1 PUBLISHes [[MqttClient.publishAll]] keeps unacknowledged:
+    * enough to keep the loopback pipe busy, far below the 65535 packet
+    * ids. */
+  val PublishWindow = 512
 
   /** Broker-memory guard for the RETAIN store (spec §3.3.1.3 puts no
     * bound on retained topics; this broker does): retained messages are
@@ -410,11 +419,11 @@ final class MqttBroker(port: Int = 0) {
     }
 }
 
-/** Minimal MQTT 3.1.1 client: synchronous CONNECT/SUBSCRIBE/QoS-1
-  * publish, callback dispatch for inbound PUBLISH (ack-after-process:
-  * the PUBACK goes out only once the handler returns, so a crash
-  * before processing redelivers — at-least-once on the consumer side
-  * too). */
+/** Minimal MQTT 3.1.1 client: synchronous CONNECT/SUBSCRIBE, pipelined
+  * QoS 1 publish ([[publishAll]]), callback dispatch for inbound PUBLISH
+  * (ack-after-process: the PUBACK goes out only once the handler
+  * returns, so a crash before processing redelivers — at-least-once on
+  * the consumer side too). */
 final class MqttClient(host: String, port: Int,
     clientId: String = "graft-client") {
   import Mqtt._
@@ -425,7 +434,9 @@ final class MqttClient(host: String, port: Int,
   private val in = sock.getInputStream
   private val subs = new java.util.concurrent.CopyOnWriteArrayList[
     (String, (String, Array[Byte]) => Unit)]
-  private val acks = new ConcurrentHashMap[Integer, CountDownLatch]()
+  // packet id -> what the reader runs when its SUBACK, UNSUBACK or
+  // PUBACK arrives
+  private val acks = new ConcurrentHashMap[Integer, Runnable]()
   private val nextId = new AtomicInteger(1)
   @volatile private var open = true
 
@@ -463,7 +474,7 @@ final class MqttClient(host: String, port: Int,
                 Array[Byte]((pid >> 8).toByte, (pid & 0xff).toByte)))
           case SUBACK | UNSUBACK | PUBACK =>
             Option(acks.remove(Integer.valueOf(readU16(b, 0))))
-              .foreach(_.countDown())
+              .foreach(_.run())
           case PINGRESP => ()
           case _ => ()
         }
@@ -472,12 +483,6 @@ final class MqttClient(host: String, port: Int,
   }, "graft-mqtt-client-reader")
   reader.setDaemon(true)
 
-  private def awaitAck(id: Int, what: String): Unit = {
-    val latch = acks.get(Integer.valueOf(id))
-    if (latch != null && !latch.await(10, TimeUnit.SECONDS))
-      throw new IOException(s"$what $id not acknowledged in 10s")
-  }
-
   /** Subscribe and block until the SUBACK. The callback fires on the
     * reader thread for every matching PUBLISH. */
   def subscribe(filter: String, qos: Int = 1)
@@ -485,39 +490,85 @@ final class MqttClient(host: String, port: Int,
     TopicMatch.validate(filter)
     subs.add((filter, cb))
     val id = allocId(nextId, acks)
-    acks.put(Integer.valueOf(id), new CountDownLatch(1))
+    val latch = new CountDownLatch(1)
+    acks.put(Integer.valueOf(id), () => latch.countDown())
     send(packet((SUBSCRIBE << 4) | 0x02,
       Array[Byte]((id >> 8).toByte, (id & 0xff).toByte)
         ++ utf8(filter) :+ qos.toByte))
-    awaitAck(id, "SUBSCRIBE")
+    if (!latch.await(10, TimeUnit.SECONDS))
+      throw new IOException(s"SUBSCRIBE $id not acknowledged in 10s")
   }
 
-  /** Publish; QoS 1 blocks until the broker's PUBACK, retransmitting
-    * with DUP=1 on timeout. `retain = true` asks the broker to store
-    * the message as the topic's retained message (spec §3.3.1.3) —
-    * late subscribers receive it on SUBSCRIBE; a zero-byte retained
-    * publish clears the slot. */
+  /** Publish; QoS 1 blocks until the broker's PUBACK ([[publishAll]] of
+    * one payload). `retain = true` asks the broker to store the message
+    * as the topic's retained message (spec §3.3.1.3) — late subscribers
+    * receive it on SUBSCRIBE; a zero-byte retained publish clears the
+    * slot. */
   def publish(topic: String, payload: Array[Byte], qos: Int = 1,
-      retain: Boolean = false): Unit = {
+      retain: Boolean = false): Unit =
     if (qos == 0)
       send(publishPacket(topic, payload, 0, 0, dup = false, retain))
-    else {
-      val id = allocId(nextId, acks)
-      val latch = new CountDownLatch(1)
-      acks.put(Integer.valueOf(id), latch)
-      send(publishPacket(topic, payload, 1, id, dup = false, retain))
-      var attempts = 0
-      while (!latch.await(RetransmitMs, TimeUnit.MILLISECONDS)) {
-        attempts += 1
-        if (attempts > 20)
-          throw new IOException(s"PUBLISH $id unacked after $attempts tries")
-        send(publishPacket(topic, payload, 1, id, dup = true, retain))
-      }
-    }
-  }
+    else publishAll(topic, Iterator.single(payload), retain)
 
   def publish(topic: String, payload: String): Unit =
     publish(topic, payload.getBytes(UTF_8), qos = 1)
+
+  /** Publish every payload to `topic` at QoS 1, in order, without a
+    * round trip per message: up to [[Mqtt.PublishWindow]] PUBLISHes are
+    * unacknowledged at a time. One left unacknowledged for
+    * [[Mqtt.RetransmitMs]] goes out again with DUP=1 and its packet id
+    * (spec §4.3.2); after [[Mqtt.MaxRetransmits]] of those the call
+    * throws. Returns once every PUBACK has arrived. */
+  def publishAll(topic: String, payloads: Iterator[Array[Byte]],
+      retain: Boolean = false): Unit = {
+    final class Unacked(val payload: Array[Byte], var deadline: Long) {
+      var resends = 0
+    }
+    val periodNs = RetransmitMs * 1000000L
+    val acked = new LinkedBlockingQueue[Integer]()
+    val unacked = new java.util.HashMap[Integer, Unacked]()
+    // no deadline of an unacknowledged PUBLISH is earlier than this
+    var nextDue = Long.MaxValue
+    def resendOverdue(now: Long): Unit = {
+      nextDue = Long.MaxValue
+      unacked.forEach { (id, u) =>
+        if (u.deadline <= now) {
+          if (u.resends == MaxRetransmits)
+            throw new IOException(
+              s"PUBLISH $id unacked after $MaxRetransmits retransmits")
+          u.resends += 1
+          u.deadline = now + periodNs
+          send(publishPacket(topic, u.payload, 1, id, dup = true, retain))
+        }
+        nextDue = math.min(nextDue, u.deadline)
+      }
+    }
+    // wait until at most `limit` PUBLISHes are unacknowledged
+    def settle(limit: Int): Unit = {
+      var id = acked.poll()
+      while (id != null) { unacked.remove(id); id = acked.poll() }
+      var now = System.nanoTime()
+      if (now >= nextDue) resendOverdue(now)
+      while (unacked.size > limit) {
+        id = acked.poll(nextDue - now, TimeUnit.NANOSECONDS)
+        if (id != null) unacked.remove(id)
+        now = System.nanoTime()
+        if (now >= nextDue) resendOverdue(now)
+      }
+    }
+    try {
+      payloads.foreach { payload =>
+        settle(PublishWindow - 1)
+        val id = Integer.valueOf(allocId(nextId, acks))
+        val u = new Unacked(payload, System.nanoTime() + periodNs)
+        unacked.put(id, u)
+        acks.put(id, () => acked.add(id))
+        nextDue = math.min(nextDue, u.deadline)
+        send(publishPacket(topic, payload, 1, id, dup = false, retain))
+      }
+      settle(0)
+    } finally unacked.keySet.forEach(id => acks.remove(id))
+  }
 
   def disconnect(): Unit = {
     open = false
@@ -528,32 +579,40 @@ final class MqttClient(host: String, port: Int,
 }
 
 /** R2's publish half over the REAL protocol: every row of each
-  * micro-batch goes out as one JSON message at QoS 1. The publish runs
-  * per PARTITION on the executors (one short-lived client each), so a
-  * report fan-out scales with the cluster instead of funneling through
-  * the driver; within a partition messages keep their order, across
-  * partitions the bus contract is unordered anyway. Delivery is
-  * at-least-once: QoS 1 on the wire × micro-batch replay on recovery —
-  * the reference's persist-and-replay contract (`nyuki/bus/
-  * persistence/`; mount empty, SURVEY.md §0) lands here as "consumers
-  * dedup by business key", which is what its at-least-once redelivery
-  * required of consumers too. Exactly-once stays the checkpointed
-  * FILE sink's contract ([[Sources.fileSink]]). */
+  * micro-batch goes out as one JSON message at QoS 1. The payload is
+  * built in the plan: `to_json` of the row, cast to binary, so its
+  * bytes equal the UTF-8 of `Dataset.toJSON`'s line for that row with
+  * no `Row` or `String` in between. The publish runs per PARTITION on
+  * the executors (one short-lived client each, sending through
+  * [[MqttClient.publishAll]]'s window of unacknowledged QoS 1
+  * PUBLISHes), so a report fan-out scales with the cluster instead of
+  * funneling through the driver; within a partition messages leave in
+  * order (a retransmitted copy arrives after later messages), across
+  * partitions the bus contract is unordered anyway. Delivery is at-least-once: QoS 1 on
+  * the wire × micro-batch replay on recovery — the reference's
+  * persist-and-replay contract (`nyuki/bus/persistence/`; mount empty,
+  * SURVEY.md §0) lands here as "consumers dedup by business key", which
+  * is what its at-least-once redelivery required of consumers too.
+  * Exactly-once stays the checkpointed FILE sink's contract
+  * ([[Sources.fileSink]]). */
 object MqttSink {
+  import org.apache.spark.sql.Encoders
+  import org.apache.spark.sql.functions.{col, struct, to_json}
 
   /** Publish one (batch) DataFrame — each row as one JSON message. */
   def publishBatch(batch: DataFrame, host: String, port: Int,
       topic: String): Unit =
-    batch.toJSON.toDF("line").foreachPartition {
-      (it: Iterator[org.apache.spark.sql.Row]) =>
+    batch.select(to_json(struct(col("*"))).cast("binary"))
+      .as(Encoders.BINARY)
+      .foreachPartition { (it: Iterator[Array[Byte]]) =>
         if (it.hasNext) {
           val c = new MqttClient(host, port,
             s"graft-sink-${java.util.UUID.randomUUID().toString.take(8)}")
             .connect()
-          try it.foreach(r => c.publish(topic, r.getString(0)))
+          try c.publishAll(topic, it)
           finally c.disconnect()
         }
-    }
+      }
 
   /** Streaming writer: each micro-batch publishes to
     * `topicFor(batchId)` — batch-scoped topics let consumers

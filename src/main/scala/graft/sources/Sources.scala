@@ -168,16 +168,21 @@ object Sources {
     /** text line → canonical event row. Malformed payloads parse to a
       * null struct and are DROPPED — one bad producer message must
       * never kill a long-running subscription (the bus contract is
-      * at-least-once delivery of VALID events, not crash-on-garbage). */
+      * at-least-once delivery of VALID events, not crash-on-garbage).
+      *
+      * The parse runs inside a generator so that each payload is parsed
+      * once: over a plain projection, Catalyst would push the `event_id
+      * IS NOT NULL` filter below it and copy `from_json` into the filter
+      * (three parses per payload). A generator's output is not an
+      * expression the optimizer can inline, so the filter stays above
+      * the one parse. `inline` turns a null struct into a row of nulls,
+      * which the filter drops. */
     def parse(lines: DataFrame): DataFrame =
-      lines.select(from_json(col("value"), wireSchema).as("m"))
-        .filter(col("m").isNotNull && col("m.event_id").isNotNull)
-        .select(col("m.event_id").as("event_id"),
-          timestamp_micros(col("m.ts_us")).as("ts"),
-          col("m.user_id").as("user_id"),
-          col("m.event_type").as("event_type"),
-          col("m.value").as("value"),
-          col("m.props").as("props"))
+      lines.select(inline(array(from_json(col("value"), wireSchema))))
+        .filter(col("event_id").isNotNull)
+        .select(col("event_id"),
+          timestamp_micros(col("ts_us")).as("ts"),
+          col("user_id"), col("event_type"), col("value"), col("props"))
   }
 
   object RateBus {

@@ -1,6 +1,7 @@
 package graft
 
-import java.net.Socket
+import java.io.{InputStream, OutputStream}
+import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
@@ -409,5 +410,129 @@ class MqttSpec extends AnyFunSuite {
       assert(got.toArray(Array.empty[String]).toSeq == Seq("y"))
       sub.disconnect(); pub.disconnect()
     }
+  }
+
+  /** A raw-socket broker for one client: `client` runs on its own thread
+    * once the peer's CONNACK is out; `peer` then reads and acks by hand.
+    * Returns what the client thread threw, if anything. */
+  private def withRawBroker(client: Int => Unit)
+      (peer: Socket => Unit): Option[Throwable] = {
+    val server = new ServerSocket(0, 1, InetAddress.getLoopbackAddress)
+    val thrown = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val t = new Thread(() =>
+      try client(server.getLocalPort)
+      catch { case e: Throwable => thrown.set(e) }, "raw-broker-client")
+    t.setDaemon(true)
+    t.start()
+    val sock = server.accept()
+    try {
+      sock.setSoTimeout(20000)
+      val (in, out) = (sock.getInputStream, sock.getOutputStream)
+      assert((Mqtt.readPacket(in)._1 >> 4) == Mqtt.CONNECT)
+      out.write(Array[Byte]((Mqtt.CONNACK << 4).toByte, 2, 0, 0))
+      out.flush()
+      peer(sock)
+      t.join(30000)
+      assert(!t.isAlive, "client thread did not finish")
+    } finally { sock.close(); server.close() }
+    Option(thrown.get)
+  }
+
+  /** (packet id, DUP flag, payload) of a QoS 1 PUBLISH read from `in`. */
+  private def readPublish(in: InputStream): (Int, Boolean, String) = {
+    val (h, b) = Mqtt.readPacket(in)
+    publishFields(h, b)
+  }
+
+  private def publishFields(h: Int, b: Array[Byte]): (Int, Boolean, String) = {
+    assert((h >> 4) == Mqtt.PUBLISH && ((h >> 1) & 3) == 1,
+      s"expected a QoS 1 PUBLISH, got header $h")
+    val (_, o) = Mqtt.readStr(b, 0)
+    (Mqtt.readU16(b, o), ((h >> 3) & 1) == 1,
+      new String(b, o + 2, b.length - o - 2, UTF_8))
+  }
+
+  private def puback(out: OutputStream, id: Int): Unit = {
+    out.write(Mqtt.packet(Mqtt.PUBACK << 4,
+      Array[Byte]((id >> 8).toByte, (id & 0xff).toByte)))
+    out.flush()
+  }
+
+  test("publishAll pipelines QoS 1: never more than PublishWindow (512) " +
+      "PUBLISHes unacknowledged, a withheld PUBACK brings the packet back " +
+      "with DUP=1 and its id, and the call returns only after the last " +
+      "PUBACK") {
+    val n = 2000
+    val returned = new CountDownLatch(1)
+    val thrown = withRawBroker { port =>
+      val c = new MqttClient("127.0.0.1", port, "pipelined").connect()
+      c.publishAll("graft/out",
+        Iterator.range(0, n).map(i => s"m$i".getBytes(UTF_8)))
+      returned.countDown()
+      c.disconnect()
+    } { sock =>
+      val (in, out) = (sock.getInputStream, sock.getOutputStream)
+      val got = scala.collection.mutable.Set.empty[String]
+      val seen = scala.collection.mutable.Set.empty[Int]
+      val unacked = scala.collection.mutable.Set.empty[Int]
+      def receive(): (Int, Boolean) = {
+        val (id, dup, payload) = readPublish(in)
+        if (!dup) {
+          assert(!seen(id), s"id $id sent twice without DUP")
+          seen += id
+          unacked += id
+          got += payload
+        } else assert(seen(id), s"DUP of an id never sent: $id")
+        assert(unacked.size <= Mqtt.PublishWindow,
+          s"${unacked.size} PUBLISHes unacknowledged")
+        (id, dup)
+      }
+      // fill the window without acking: only retransmits may follow
+      while (unacked.size < Mqtt.PublishWindow) receive()
+      val withheld = unacked.min
+      sock.setSoTimeout(300)
+      try while (true) assert(receive()._2, "a new PUBLISH past the window")
+      catch { case _: java.net.SocketTimeoutException => () }
+      sock.setSoTimeout(20000)
+      // ack all but one, then every later packet at once
+      unacked.filter(_ != withheld).foreach { id =>
+        puback(out, id); unacked -= id }
+      var sawDup = false
+      while (got.size < n || !sawDup) {
+        val (id, dup) = receive()
+        if (id == withheld) sawDup ||= dup
+        else { puback(out, id); unacked -= id }
+      }
+      assert(unacked == Set(withheld))
+      assert(returned.getCount == 1,
+        "publishAll returned before its last PUBACK")
+      puback(out, withheld)
+      assert(returned.await(10, TimeUnit.SECONDS),
+        "publishAll did not return after its last PUBACK")
+      assert(got == (0 until n).map(i => s"m$i").toSet)
+    }
+    assert(thrown.isEmpty, s"client threw $thrown")
+  }
+
+  test("publishAll gives up on a PUBACK that never comes: 20 DUP=1 " +
+      "retransmits of the packet, then an IOException") {
+    val thrown = withRawBroker { port =>
+      val c = new MqttClient("127.0.0.1", port, "unacked").connect()
+      try c.publishAll("graft/out", Iterator.single("x".getBytes(UTF_8)))
+      finally c.disconnect()
+    } { sock =>
+      val in = sock.getInputStream
+      val (id, dup, _) = readPublish(in)
+      assert(!dup)
+      // the client disconnects when it gives up
+      val copies = Iterator.continually(Mqtt.readPacket(in))
+        .takeWhile { case (h, _) => (h >> 4) != Mqtt.DISCONNECT }
+        .map { case (h, b) => publishFields(h, b) }.toSeq
+      assert(copies.forall { case (again, d, _) => again == id && d },
+        "only DUP=1 copies of the one packet")
+      assert(copies.size == Mqtt.MaxRetransmits)
+    }
+    assert(thrown.exists(_.isInstanceOf[java.io.IOException]),
+      s"expected an IOException, got $thrown")
   }
 }

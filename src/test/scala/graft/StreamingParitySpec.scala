@@ -1500,15 +1500,37 @@ class StreamingParitySpec extends SparkSpec {
     import java.net.ServerSocket
     import graft.sources.Sources
     val n = 5000L
-    // JSON producer on a loopback ephemeral port: the RateBus feed
-    // mapping rendered as wire JSON (plus one garbage line the parse
-    // must drop without killing the subscription)
+    // payloads the parse must drop without killing the subscription:
+    // garbage, empty, JSON null, an array, no event_id, a string event_id
+    val dropped = Seq("this is not json {", "", "null", "[]",
+      """{"ts_us":1,"user_id":2,"event_type":"click","value":1.0,""" +
+        """"props":"x"}""",
+      """{"event_id":"7","ts_us":1,"user_id":2,"event_type":"click",""" +
+        """"value":1.0,"props":"x"}""")
+    // and two it must keep: an ill-typed value (read as NULL) and
+    // escaped non-ASCII text in props
+    val kept = Seq(
+      """{"event_id":8,"ts_us":1,"user_id":2,"event_type":"click",""" +
+        """"value":"abc","props":"x"}""",
+      """{"event_id":9,"ts_us":1,"user_id":2,"event_type":"view",""" +
+        "\"value\":1.5,\"props\":\"{\\\"k\\\":\\\"\\u00e9\\u4e2d\\\"}\"}")
+    val parsed = Sources.SocketJsonBus.parse((dropped ++ kept).toDF("value"))
+    assert(parsed.schema == org.apache.spark.sql.types.StructType.fromDDL(
+      "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, " +
+        "value DOUBLE, props STRING"))
+    val oneUs = Timestamp.from(java.time.Instant.ofEpochSecond(0, 1000))
+    assert(parsed.collect().toSeq.sortBy(_.getLong(0)) == Seq(
+      org.apache.spark.sql.Row(8L, oneUs, 2L, "click", null, "x"),
+      org.apache.spark.sql.Row(9L, oneUs, 2L, "view", 1.5,
+        "{\"k\":\"\u00e9\u4e2d\"}")))
+    // JSON producer on a loopback ephemeral port: the dropped payloads,
+    // then the RateBus feed mapping rendered as wire JSON
     val server = new ServerSocket(0, 1,
       java.net.InetAddress.getLoopbackAddress)
     val producer = new Thread(() => {
       val sock = server.accept()
       val out = new PrintWriter(sock.getOutputStream, true)
-      out.println("this is not json {")
+      dropped.foreach(out.println)
       (0L until n).foreach { k =>
         val tsUs = 1700000000000000L + (k % 72L) * 3600L * 1000000L
         val et = Seq("click", "view", "purchase")((k % 3L).toInt)
@@ -1558,6 +1580,19 @@ class StreamingParitySpec extends SparkSpec {
     }
   }
 
+  test("SocketJsonBus.parse parses each payload once: one from_json in " +
+      "the optimized plan, none copied into the pushed-down filter") {
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import graft.sources.Sources
+    // a Range, not a local relation, so the optimizer cannot fold the
+    // parse away
+    val lines = spark.range(4).select(col("id").cast("string").as("value"))
+    val plan = Sources.SocketJsonBus.parse(lines).queryExecution.optimizedPlan
+    val parses = plan.flatMap(_.expressions.flatMap(_.collect {
+      case j: JsonToStructs => j }))
+    assert(parses.size == 1, s"from_json per payload: ${parses.size}\n$plan")
+  }
+
   test("bus-source seam: the tumbling pipeline runs off a REAL MQTT " +
       "3.1.1 broker (hand-rolled loopback sockets, QoS 1) and matches " +
       "the batch reconstruction — R1 closed at the protocol level") {
@@ -1598,7 +1633,7 @@ class StreamingParitySpec extends SparkSpec {
         Thread.sleep(100)
       q.processAllAvailable()
       assert(landed() == n, s"expected all $n events, got ${landed()}")
-      assert(bus.dropped == 0, "bridge buffer must not overflow here")
+      assert(bus.dropped == 0, "the lane log must not overflow here")
       val got = spark.table(name).collect()
         .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2),
           r.getDouble(3))).sortBy(t => (t._1.getTime, t._2))
@@ -1618,7 +1653,10 @@ class StreamingParitySpec extends SparkSpec {
 
   // The exactly-once check of the QoS 1 partitioned bus at every lane
   // count: one lane is the configuration where QoS 1 retransmits once
-  // landed as duplicates, so it is pinned along with 2 and 4.
+  // landed as duplicates, so it is pinned along with 2 and 4. The lanes
+  // are one stream with one input partition per lane; "unioned readers"
+  // in the name is the old socket-reader wording, kept so the test ids
+  // stay stable.
   Seq(1, 2, 4).foreach { lanes =>
     val conns =
       if (lanes == 1) "1 broker connection" else s"$lanes broker connections"
@@ -1662,7 +1700,7 @@ class StreamingParitySpec extends SparkSpec {
           Thread.sleep(100)
         q.processAllAvailable()
         assert(landed() == n, s"expected all $n events, got ${landed()}")
-        assert(bus.dropped == 0, "no lane bridge may overflow here")
+        assert(bus.dropped == 0, "no lane log may overflow here")
         val got = spark.table(name).collect()
           .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2),
             r.getDouble(3))).sortBy(t => (t._1.getTime, t._2))
@@ -1821,6 +1859,41 @@ class StreamingParitySpec extends SparkSpec {
       bus.close()
       broker.stop()
     }
+  }
+
+  test("MqttSink payloads are the UTF-8 bytes of Dataset.toJSON, row " +
+      "for row: a null field, a timestamp, a double and escaped " +
+      "non-ASCII text") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch,
+      TimeUnit}
+    import graft.sources.{MqttBroker, MqttClient, MqttSink}
+    val ts = Timestamp.from(java.time.Instant.parse(
+      "2023-11-14T22:13:20.123456Z"))
+    val batch = Seq(
+      (1L, Option("caf\u00e9 \u4e2d \"q\"\n\t\\ \u0001"), ts, 0.1 + 0.2),
+      (2L, None, ts, -1.0e-300),
+      (3L, Option(""), null, Double.NaN),
+      (4L, Option("\ud83d\ude00"), ts, 1.0e21))
+      .toDF("id", "text", "ts", "x").repartition(2)
+    val broker = new MqttBroker().start()
+    try {
+      val got = new ConcurrentLinkedQueue[Seq[Byte]]()
+      val all = new CountDownLatch(4)
+      val sub = new MqttClient("127.0.0.1", broker.boundPort, "bytes-sub")
+        .connect()
+      // QoS 0 out to the subscriber: no broker retransmit can add a copy
+      sub.subscribe("graft/bytes", qos = 0) { (_, p) =>
+        got.add(p.toSeq); all.countDown()
+      }
+      MqttSink.publishBatch(batch, "127.0.0.1", broker.boundPort,
+        "graft/bytes")
+      assert(all.await(10, TimeUnit.SECONDS), s"got ${got.size} of 4")
+      val expected = batch.toJSON.collect()
+        .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8).toSeq)
+      assert(got.toArray.toSeq.map(_.asInstanceOf[Seq[Byte]])
+        .sortBy(_.mkString(",")) == expected.toSeq.sortBy(_.mkString(",")))
+      sub.disconnect()
+    } finally broker.stop()
   }
 
   test("streaming curation: q_corpus_curate's survivor set is exactly " +
