@@ -17,11 +17,16 @@ BENCHMARK.json it prints the medians and quartiles of both sides, the
 relative change of the medians and the number of pairs the change won.
 The claim rule holds when the change wins at least 9 pairs in 10 and its
 median is better than the parent's by more than the parent's
-interquartile range. The wall-clock figures of the run detail files
-(`samples.wall`, not gated) are printed the same way, without the rule.
+interquartile range. Next to it each metric gets a no-regression verdict
+against its `bound` (a fraction of the parent's median): it holds when
+the change's median is worse than the parent's by no more than the
+bound, and it is unresolved when the parent's IQR divided by its median
+is wider than the bound, unless every change run beats every parent run.
+The wall-clock figures of the run detail files (`samples.wall`, not
+gated) are printed the same way, without either rule.
 
 Exits 1 if any run is incorrect, has failed operations or does not
-finish; the claim rule never changes the exit status.
+finish; neither rule changes the exit status.
 """
 import argparse
 import json
@@ -64,7 +69,34 @@ def run_once(root, workload, seed, seconds):
     return result, detail
 
 
-def summarize(name, parent, change, better):
+def claim_holds(parent, change, better):
+    """(holds, wins, gap, parent IQR) of the claim rule: the change wins
+    at least CLAIM_WINS of the pairs and its median beats the parent's by
+    more than the parent's interquartile range."""
+    sign = 1.0 if better == "lower" else -1.0
+    wins = sum(1 for p, c in zip(parent, change) if sign * (p - c) > 0)
+    gap = sign * (quantile(parent, 0.5) - quantile(change, 0.5))
+    iqr = quantile(parent, 0.75) - quantile(parent, 0.25)
+    holds = wins >= math.ceil(CLAIM_WINS * len(parent)) and gap > iqr
+    return holds, wins, gap, iqr
+
+
+def no_regression(parent, change, better, bound):
+    """Verdict "holds", "fails" or "unresolved": the change's median may
+    be worse than the parent's by at most `bound` of the parent's median;
+    a parent IQR wider than `bound` of its median leaves the verdict
+    unresolved, unless every change run beats every parent run."""
+    sign = 1.0 if better == "lower" else -1.0
+    pm = quantile(parent, 0.5)
+    spread = (quantile(parent, 0.75) - quantile(parent, 0.25)) / abs(pm)
+    every_run_beats = all(sign * (p - c) > 0 for p in parent for c in change)
+    if spread > bound and not every_run_beats:
+        return "unresolved"
+    worse = sign * (quantile(change, 0.5) - pm) / abs(pm)
+    return "holds" if worse <= bound else "fails"
+
+
+def summarize(name, parent, change, better, bound=None):
     """Report line for one metric over paired values; `better` is
     "lower", "higher" or None (information only, no rule)."""
     pm, cm = quantile(parent, 0.5), quantile(change, 0.5)
@@ -75,13 +107,12 @@ def summarize(name, parent, change, better):
             f"change {cm:10.2f} [{cq1:.2f}-{cq3:.2f}]  {rel:+6.1f}%")
     if better is None:
         return line
-    sign = 1.0 if better == "lower" else -1.0
-    wins = sum(1 for p, c in zip(parent, change) if sign * (p - c) > 0)
-    gap = sign * (pm - cm)
-    holds = (wins >= math.ceil(CLAIM_WINS * len(parent))
-             and gap > pq3 - pq1)
+    holds, wins, gap, iqr = claim_holds(parent, change, better)
     line += (f"  wins {wins}/{len(parent)}  gap {gap:.2f} vs parent IQR "
-             f"{pq3 - pq1:.2f}: claim rule {'holds' if holds else 'fails'}")
+             f"{iqr:.2f}: claim rule {'holds' if holds else 'fails'}")
+    if bound is not None:
+        line += (f"; no regression beyond {bound:g}: "
+                 f"{no_regression(parent, change, better, bound)}")
     return line
 
 
@@ -96,7 +127,8 @@ def main():
     ap.add_argument("--out", help="write every run's metrics here (JSON)")
     a = ap.parse_args()
     with open(os.path.join(a.change, "BENCHMARK.json")) as f:
-        gated = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+        gated = {m["name"]: (m["better"], m.get("bound"))
+                 for m in json.load(f)["end_to_end"]}
     sides = {"parent": a.parent, "change": a.change}
     runs = {w: {s: [] for s in sides} for w in a.workload}
     bad = 0
@@ -126,9 +158,10 @@ def main():
         if not pairs:
             print("  no pair with two correct runs")
             continue
-        for name, better in gated.items():
+        for name, (better, bound) in gated.items():
             print(summarize(name, [p["metrics"][name] for p, _ in pairs],
-                            [c["metrics"][name] for _, c in pairs], better))
+                            [c["metrics"][name] for _, c in pairs], better,
+                            bound))
         for name in sorted(pairs[0][0]["wall"]):
             print(summarize("wall." + name,
                             [p["wall"][name] for p, _ in pairs],

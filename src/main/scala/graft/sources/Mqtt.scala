@@ -47,8 +47,9 @@ import graft.plans.TopicMatch
   *
   * Descopes, stated: QoS 2 (exactly-once is the CHECKPOINT's contract
   * in this engine, not the wire's), wills, auth, and keep-alive
-  * enforcement. A violation (QoS 2 publish, oversized packet) fails
-  * the connection rather than guessing.
+  * enforcement. Both ends fail the connection on a malformed packet
+  * (a QoS 2 or 3 PUBLISH, packet id 0, a body too short for what it
+  * declares, an oversized packet) rather than guessing.
   *
   * Scale note: this broker is test/dev infrastructure — the production
   * deployment points [[MqttBus]] (or a Kafka source, same seam) at a
@@ -96,13 +97,11 @@ object Mqtt {
     require(n >= 0 && n <= 268435455, s"remaining length out of range: $n")
     val out = Array.newBuilder[Byte]
     var x = n
-    var continue = true
-    while (continue) {
+    do {
       val digit = x % 128
       x /= 128
-      out += (if (x > 0) (digit | 0x80).toByte else digit.toByte)
-      continue = x > 0
-    }
+      out += (if (x > 0) digit | 0x80 else digit).toByte
+    } while (x > 0)
     out.result()
   }
 
@@ -110,8 +109,14 @@ object Mqtt {
   def utf8(s: String): Array[Byte] = {
     val b = s.getBytes(UTF_8)
     require(b.length <= 0xffff, "string too long for MQTT")
-    Array[Byte]((b.length >> 8).toByte, (b.length & 0xff).toByte) ++ b
+    u16(b.length) ++ b
   }
+
+  /** A two-byte integer, high byte first (spec §1.5.2): the one encoder
+    * of packet ids (PUBLISH, PUBACK, SUBSCRIBE, SUBACK, UNSUBACK) and
+    * string lengths. */
+  private[sources] def u16(n: Int): Array[Byte] =
+    Array[Byte]((n >> 8).toByte, (n & 0xff).toByte)
 
   def packet(byte1: Int, body: Array[Byte]): Array[Byte] =
     Array(byte1.toByte) ++ remainingLength(body.length) ++ body
@@ -122,18 +127,15 @@ object Mqtt {
     val b1 = in.read()
     if (b1 == -1) throw new EOFException("peer closed")
     var mult = 1
-    var len = 0
-    var digits = 0
-    var continue = true
-    while (continue) {
-      val d = in.read()
+    var len, digits, d = 0
+    do {
+      d = in.read()
       if (d == -1) throw new EOFException("peer closed mid-length")
       len += (d & 0x7f) * mult
       mult *= 128
       digits += 1
       if (digits > 4) throw new IOException("malformed remaining length")
-      continue = (d & 0x80) != 0
-    }
+    } while ((d & 0x80) != 0)
     if (len > MaxPacketBytes)
       throw new IOException(s"packet over ${MaxPacketBytes}B cap: $len")
     val body = new Array[Byte](len)
@@ -146,8 +148,14 @@ object Mqtt {
     (b1, body)
   }
 
-  def readU16(b: Array[Byte], off: Int): Int =
+  /** Fails the connection when `b` ends before `end`. */
+  private[sources] def need(b: Array[Byte], end: Int): Unit =
+    if (end > b.length) throw new IOException("packet body too short")
+
+  def readU16(b: Array[Byte], off: Int): Int = {
+    need(b, off + 2)
     ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
+  }
 
   /** Allocate a packet id for a QoS 1 PUBLISH or a (UN)SUBSCRIBE: counts
     * 1..65535 and wraps back to 1 (spec §2.3.1 forbids id 0), skipping
@@ -170,6 +178,7 @@ object Mqtt {
 
   def readStr(b: Array[Byte], off: Int): (String, Int) = {
     val n = readU16(b, off)
+    need(b, off + 2 + n)
     (new String(b, off + 2, n, UTF_8), off + 2 + n)
   }
 
@@ -177,12 +186,32 @@ object Mqtt {
   def publishPacket(topic: String, payload: Array[Byte], qos: Int,
       packetId: Int, dup: Boolean, retain: Boolean = false): Array[Byte] = {
     val flags = (if (dup) 0x08 else 0) | (qos << 1) | (if (retain) 1 else 0)
-    val vh =
-      if (qos > 0) utf8(topic) ++
-        Array[Byte]((packetId >> 8).toByte, (packetId & 0xff).toByte)
-      else utf8(topic)
+    val vh = if (qos > 0) utf8(topic) ++ u16(packetId) else utf8(topic)
     packet((PUBLISH << 4) | flags, vh ++ payload)
   }
+
+  /** One received PUBLISH; `packetId` is 0 at QoS 0. */
+  private[sources] final case class Publish(topic: String, qos: Int,
+      packetId: Int, payload: Array[Byte], retain: Boolean)
+
+  /** Decode the PUBLISH with header byte `h` and body `b`; a QoS 2 or 3,
+    * packet id 0 at QoS 1 or a body too short throws IOException. */
+  private[sources] def decodePublish(h: Int, b: Array[Byte]): Publish = {
+    val qos = (h >> 1) & 0x03
+    if (qos > 1) throw new IOException(s"QoS $qos PUBLISH not supported")
+    val (topic, o) = readStr(b, 0)
+    val (pid, payloadOff) =
+      if (qos == 1) (readPacketId(b, o), o + 2) else (0, o)
+    Publish(topic, qos, pid,
+      java.util.Arrays.copyOfRange(b, payloadOff, b.length), (h & 1) != 0)
+  }
+}
+
+/** One connection's socket writer: each packet is written whole and
+  * flushed under one lock, so threads never interleave packets. */
+private[sources] class PacketWriter(out: OutputStream) {
+  def send(bytes: Array[Byte]): Unit =
+    synchronized { out.write(bytes); out.flush() }
 }
 
 /** Minimal-but-conformant MQTT 3.1.1 broker on a loopback ephemeral
@@ -192,16 +221,13 @@ final class MqttBroker(port: Int = 0) {
   import Mqtt._
 
   private final case class Pending(topic: String, payload: Array[Byte],
-      var deadlineNanos: Long, retain: Boolean = false)
+      var deadlineNanos: Long, retain: Boolean)
 
-  private final class Conn(val sock: Socket) {
-    val out: OutputStream = sock.getOutputStream
+  private final class Conn(val sock: Socket)
+      extends PacketWriter(sock.getOutputStream) {
     val subs = TrieMap.empty[String, Int] // filter -> granted qos
     val pending = new ConcurrentHashMap[Integer, Pending]()
     val nextId = new AtomicInteger(1)
-    def allocId(): Int = Mqtt.allocId(nextId, pending)
-    def send(bytes: Array[Byte]): Unit =
-      out.synchronized { out.write(bytes); out.flush() }
   }
 
   private val server =
@@ -279,12 +305,10 @@ final class MqttBroker(port: Int = 0) {
       if ((b1 >> 4) != CONNECT)
         throw new IOException("first packet must be CONNECT")
       val (proto, o1) = readStr(body, 0)
-      val level = body(o1) & 0xff
-      if (proto != "MQTT" || level != 4)
-        // 0x01 = unacceptable protocol level (spec §3.2.2.3)
-        c.send(Array[Byte]((CONNACK << 4).toByte, 2, 0, 1))
-      else {
-        c.send(Array[Byte]((CONNACK << 4).toByte, 2, 0, 0))
+      val accepted = proto == "MQTT" && (body(o1) & 0xff) == 4
+      // rc 0x01 = unacceptable protocol level (spec §3.2.2.3)
+      c.send(packet(CONNACK << 4, Array[Byte](0, if (accepted) 0 else 1)))
+      if (accepted) {
         c.sock.setSoTimeout(0)
         var open = true
         while (open) {
@@ -294,50 +318,25 @@ final class MqttBroker(port: Int = 0) {
               if ((h & 0x0f) != 2)
                 throw new IOException("SUBSCRIBE flags must be 0b0010")
               val pid = readPacketId(b, 0)
+              val granted = Seq.newBuilder[(String, Int)]
               var off = 2
-              val granted = Array.newBuilder[Byte]
-              val newFilters = Seq.newBuilder[(String, Int)]
               while (off < b.length) {
                 val (filter, o) = readStr(b, off)
-                val reqQos = b(o) & 0x03
-                off = o + 1
+                need(b, o + 1)
                 TopicMatch.validate(filter)
-                val q = math.min(reqQos, 1) // QoS 2 not offered
+                val q = math.min(b(o) & 0x03, 1) // QoS 2 not offered
                 c.subs(filter) = q
-                newFilters += ((filter, q))
-                granted += q.toByte
+                granted += ((filter, q))
+                off = o + 1
               }
-              c.send(packet(SUBACK << 4,
-                Array[Byte]((pid >> 8).toByte, (pid & 0xff).toByte)
-                  ++ granted.result()))
+              val fs = granted.result()
+              c.send(packet(SUBACK << 4, u16(pid) ++ fs.map(_._2.toByte)))
               // retained delivery (spec §3.3.1.3): each retained topic
-              // matching a just-granted filter goes out with RETAIN=1 —
-              // at most once per topic per SUBSCRIBE packet (max granted
-              // qos of the matching filters), so overlapping filters in
-              // one packet don't double-deliver. QoS 1 deliveries join
-              // the normal pending/retransmit machinery.
-              val fs = newFilters.result()
-              retained.readOnlySnapshot().foreach {
-                case (topic, (payload, rq)) =>
-                  val qs = fs.collect {
-                    case (f, q) if TopicMatch.matches(topic, f) => q
-                  }
-                  if (qs.nonEmpty) {
-                    val dq = math.min(rq, qs.max)
-                    try {
-                      if (dq == 0)
-                        c.send(publishPacket(topic, payload, 0, 0,
-                          dup = false, retain = true))
-                      else {
-                        val id = c.allocId()
-                        c.pending.put(Integer.valueOf(id),
-                          Pending(topic, payload, System.nanoTime()
-                            + RetransmitMs * 1000000L, retain = true))
-                        c.send(publishPacket(topic, payload, 1, id,
-                          dup = false, retain = true))
-                      }
-                    } catch { case _: IOException => dropConn(c) }
-                  }
+              // matching a just-granted filter goes out once, RETAIN=1,
+              // at the highest qos this packet's filters grant it
+              retained.readOnlySnapshot().foreach { case (t, (pl, rq)) =>
+                val g = grant(t, fs)
+                if (g >= 0) deliver(c, t, pl, math.min(rq, g), retain = true)
               }
             case UNSUBSCRIBE =>
               val pid = readPacketId(b, 0)
@@ -347,38 +346,26 @@ final class MqttBroker(port: Int = 0) {
                 c.subs.remove(filter)
                 off = o
               }
-              c.send(packet(UNSUBACK << 4,
-                Array[Byte]((pid >> 8).toByte, (pid & 0xff).toByte)))
+              c.send(packet(UNSUBACK << 4, u16(pid)))
             case PUBLISH =>
-              val qos = (h >> 1) & 0x03
-              if (qos > 1) throw new IOException("QoS 2 not supported")
-              val (topic, o) = readStr(b, 0)
-              val (pid, payloadOff) =
-                if (qos == 1) (readPacketId(b, o), o + 2) else (0, o)
-              val payload = java.util.Arrays
-                .copyOfRange(b, payloadOff, b.length)
+              val p = decodePublish(h, b)
               // RETAIN=1 (spec §3.3.1.3): store as the topic's retained
-              // message (zero-byte payload deletes), then fan out
-              // normally — live deliveries carry RETAIN=0. The store is
-              // capped (MaxRetainedTopics): a NEW retained topic past
-              // the cap fails this connection rather than growing
-              // broker memory without bound (overwrites and deletes
-              // always succeed).
-              if ((h & 0x01) != 0) {
-                if (payload.isEmpty) retained.remove(topic)
-                else {
-                  if (!retained.contains(topic)
-                      && retained.size >= MaxRetainedTopics)
-                    throw new IOException(
-                      s"retained-topic cap $MaxRetainedTopics exceeded")
-                  retained(topic) = (payload, qos)
-                }
+              // message (zero-byte deletes); a NEW topic past the
+              // MaxRetainedTopics cap fails this connection instead of
+              // growing broker memory without bound. Live fan-out
+              // carries RETAIN=0.
+              if (p.retain && p.payload.isEmpty) retained.remove(p.topic)
+              else if (p.retain) {
+                if (!retained.contains(p.topic)
+                    && retained.size >= MaxRetainedTopics)
+                  throw new IOException(
+                    s"retained-topic cap $MaxRetainedTopics exceeded")
+                retained(p.topic) = (p.payload, p.qos)
               }
               // PUBACK once stored (§4.3.2): no subscriber is primed stale
-              if (qos == 1)
-                c.send(packet(PUBACK << 4,
-                  Array[Byte]((pid >> 8).toByte, (pid & 0xff).toByte)))
-              route(topic, payload, qos)
+              if (p.qos == 1)
+                c.send(packet(PUBACK << 4, u16(p.packetId)))
+              route(p.topic, p.payload, p.qos)
             case PUBACK =>
               c.pending.remove(Integer.valueOf(readU16(b, 0)))
             case PINGREQ =>
@@ -393,6 +380,12 @@ final class MqttBroker(port: Int = 0) {
     finally dropConn(c)
   }
 
+  /** The highest qos `filters` grant `topic`, or -1 if none matches. */
+  private def grant(topic: String, filters: Iterable[(String, Int)]): Int =
+    filters.foldLeft(-1) { case (g, (f, q)) =>
+      if (TopicMatch.matches(topic, f)) math.max(g, q) else g
+    }
+
   /** Fan a published message out to every subscribed connection ONCE,
     * at max(granted qos of matching filters) capped by the publish qos
     * (spec §3.3.5 allows one delivery per connection for overlapping
@@ -400,37 +393,42 @@ final class MqttBroker(port: Int = 0) {
   private def route(topic: String, payload: Array[Byte],
       pubQos: Int): Unit =
     conns.forEach { c =>
-      val qs = c.subs.readOnlySnapshot().collect {
-        case (filter, q) if TopicMatch.matches(topic, filter) => q
-      }
-      if (qs.nonEmpty) {
-        val qos = math.min(pubQos, qs.max)
-        try {
-          if (qos == 0)
-            c.send(publishPacket(topic, payload, 0, 0, dup = false))
-          else {
-            val id = c.allocId()
-            c.pending.put(Integer.valueOf(id), Pending(topic, payload,
-              System.nanoTime() + RetransmitMs * 1000000L))
-            c.send(publishPacket(topic, payload, 1, id, dup = false))
-          }
-        } catch { case _: IOException => dropConn(c) }
-      }
+      val g = grant(topic, c.subs.readOnlySnapshot())
+      if (g >= 0) deliver(c, topic, payload, math.min(pubQos, g),
+        retain = false)
     }
+
+  /** Send one message to `c`, live or retained. At QoS 1 it joins the
+    * connection's in-flight set and is retransmitted until PUBACK'd; a
+    * failed write drops the connection. */
+  private def deliver(c: Conn, topic: String, payload: Array[Byte],
+      qos: Int, retain: Boolean): Unit =
+    try {
+      val id = if (qos == 0) 0 else {
+        val id = allocId(c.nextId, c.pending)
+        c.pending.put(Integer.valueOf(id), Pending(topic, payload,
+          System.nanoTime() + RetransmitMs * 1000000L, retain))
+        id
+      }
+      c.send(publishPacket(topic, payload, qos, id, dup = false, retain))
+    } catch { case _: IOException => dropConn(c) }
 }
 
 /** Minimal MQTT 3.1.1 client: synchronous CONNECT/SUBSCRIBE, pipelined
   * QoS 1 publish ([[publishAll]]), callback dispatch for inbound PUBLISH
   * (ack-after-process: the PUBACK goes out only once the handler
   * returns, so a crash before processing redelivers — at-least-once on
-  * the consumer side too). */
+  * the consumer side too). It checks what it receives as the broker
+  * does: a malformed packet (a QoS 2 or 3 PUBLISH, packet id 0, a body
+  * too short for what it declares) closes the connection without
+  * running a callback or sending a PUBACK. */
 final class MqttClient(host: String, port: Int,
     clientId: String = "graft-client") {
   import Mqtt._
 
   private val sock = new Socket(host, port)
   sock.setTcpNoDelay(true) // see MqttBroker's accept loop
-  private val out = sock.getOutputStream
+  private val wire = new PacketWriter(sock.getOutputStream)
   private val in = sock.getInputStream
   private val subs = new java.util.concurrent.CopyOnWriteArrayList[
     (String, (String, Array[Byte]) => Unit)]
@@ -438,48 +436,43 @@ final class MqttClient(host: String, port: Int,
   // PUBACK arrives
   private val acks = new ConcurrentHashMap[Integer, Runnable]()
   private val nextId = new AtomicInteger(1)
-  @volatile private var open = true
 
-  private def send(bytes: Array[Byte]): Unit =
-    out.synchronized { out.write(bytes); out.flush() }
-
+  /** CONNECT and wait for the CONNACK; throws IOException on a
+    * malformed CONNACK, IllegalArgumentException on a refusal. */
   def connect(): this.type = {
-    // CONNECT: MQTT level 4, clean session, keepalive 60
-    val vh = utf8("MQTT") ++ Array[Byte](4, 0x02, 0, 60)
-    send(packet(CONNECT << 4, vh ++ utf8(clientId)))
-    val (h, body) = readPacket(in) // synchronous CONNACK
-    require((h >> 4) == CONNACK && body(1) == 0,
-      s"broker refused connection: rc=${body(1)}")
+    try {
+      // CONNECT: MQTT level 4, clean session, keepalive 60
+      wire.send(packet(CONNECT << 4,
+        utf8("MQTT") ++ Array[Byte](4, 0x02, 0, 60) ++ utf8(clientId)))
+      val (h, body) = readPacket(in) // synchronous CONNACK
+      if ((h >> 4) != CONNACK || body.length < 2)
+        throw new IOException(s"malformed CONNACK (header $h)")
+      require(body(1) == 0, s"broker refused connection: rc=${body(1)}")
+    } catch { case e: Throwable => close(); throw e }
     reader.start()
     this
   }
 
   private val reader = new Thread(() => {
     try {
-      while (open) {
+      while (true) {
         val (h, b) = readPacket(in)
         (h >> 4) match {
           case PUBLISH =>
-            val qos = (h >> 1) & 0x03
-            val (topic, o) = readStr(b, 0)
-            val (pid, payloadOff) =
-              if (qos >= 1) (readU16(b, o), o + 2) else (0, o)
-            val payload = java.util.Arrays
-              .copyOfRange(b, payloadOff, b.length)
+            val p = decodePublish(h, b)
             subs.forEach { case (filter, cb) =>
-              if (TopicMatch.matches(topic, filter)) cb(topic, payload)
+              if (TopicMatch.matches(p.topic, filter)) cb(p.topic, p.payload)
             }
-            if (qos == 1)
-              send(packet(PUBACK << 4,
-                Array[Byte]((pid >> 8).toByte, (pid & 0xff).toByte)))
+            if (p.qos == 1)
+              wire.send(packet(PUBACK << 4, u16(p.packetId)))
           case SUBACK | UNSUBACK | PUBACK =>
             Option(acks.remove(Integer.valueOf(readU16(b, 0))))
               .foreach(_.run())
-          case PINGRESP => ()
-          case _ => ()
+          case _ => () // PINGRESP
         }
       }
-    } catch { case _: Throwable => () } // EOF / close: reader exits
+    } catch { case _: Throwable => () } // EOF, close or malformed packet
+    finally close()
   }, "graft-mqtt-client-reader")
   reader.setDaemon(true)
 
@@ -492,9 +485,8 @@ final class MqttClient(host: String, port: Int,
     val id = allocId(nextId, acks)
     val latch = new CountDownLatch(1)
     acks.put(Integer.valueOf(id), () => latch.countDown())
-    send(packet((SUBSCRIBE << 4) | 0x02,
-      Array[Byte]((id >> 8).toByte, (id & 0xff).toByte)
-        ++ utf8(filter) :+ qos.toByte))
+    wire.send(packet((SUBSCRIBE << 4) | 0x02,
+      u16(id) ++ utf8(filter) :+ qos.toByte))
     if (!latch.await(10, TimeUnit.SECONDS))
       throw new IOException(s"SUBSCRIBE $id not acknowledged in 10s")
   }
@@ -507,7 +499,7 @@ final class MqttClient(host: String, port: Int,
   def publish(topic: String, payload: Array[Byte], qos: Int = 1,
       retain: Boolean = false): Unit =
     if (qos == 0)
-      send(publishPacket(topic, payload, 0, 0, dup = false, retain))
+      wire.send(publishPacket(topic, payload, 0, 0, dup = false, retain))
     else publishAll(topic, Iterator.single(payload), retain)
 
   def publish(topic: String, payload: String): Unit =
@@ -538,7 +530,8 @@ final class MqttClient(host: String, port: Int,
               s"PUBLISH $id unacked after $MaxRetransmits retransmits")
           u.resends += 1
           u.deadline = now + periodNs
-          send(publishPacket(topic, u.payload, 1, id, dup = true, retain))
+          wire.send(
+            publishPacket(topic, u.payload, 1, id, dup = true, retain))
         }
         nextDue = math.min(nextDue, u.deadline)
       }
@@ -564,18 +557,20 @@ final class MqttClient(host: String, port: Int,
         unacked.put(id, u)
         acks.put(id, () => acked.add(id))
         nextDue = math.min(nextDue, u.deadline)
-        send(publishPacket(topic, payload, 1, id, dup = false, retain))
+        wire.send(publishPacket(topic, payload, 1, id, dup = false, retain))
       }
       settle(0)
     } finally unacked.keySet.forEach(id => acks.remove(id))
   }
 
   def disconnect(): Unit = {
-    open = false
-    try send(Array[Byte]((DISCONNECT << 4).toByte, 0))
+    try wire.send(Array[Byte]((DISCONNECT << 4).toByte, 0))
     catch { case _: IOException => () }
-    try sock.close() catch { case _: Throwable => () }
+    close()
   }
+
+  private def close(): Unit =
+    try sock.close() catch { case _: Throwable => () }
 }
 
 /** R2's publish half over the REAL protocol: every row of each
@@ -588,11 +583,12 @@ final class MqttClient(host: String, port: Int,
   * PUBLISHes), so a report fan-out scales with the cluster instead of
   * funneling through the driver; within a partition messages leave in
   * order (a retransmitted copy arrives after later messages), across
-  * partitions the bus contract is unordered anyway. Delivery is at-least-once: QoS 1 on
-  * the wire × micro-batch replay on recovery — the reference's
-  * persist-and-replay contract (`nyuki/bus/persistence/`; mount empty,
-  * SURVEY.md §0) lands here as "consumers dedup by business key", which
-  * is what its at-least-once redelivery required of consumers too.
+  * partitions the bus contract is unordered anyway. Delivery is
+  * at-least-once: QoS 1 on the wire × micro-batch replay on recovery —
+  * the reference's persist-and-replay contract (`nyuki/bus/persistence/`;
+  * mount empty, SURVEY.md §0) lands here as "consumers dedup by business
+  * key", which is what its at-least-once redelivery required of
+  * consumers too.
   * Exactly-once stays the checkpointed FILE sink's contract
   * ([[Sources.fileSink]]). */
 object MqttSink {

@@ -1,9 +1,10 @@
 package graft
 
-import java.io.{InputStream, OutputStream}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.io.{EOFException, InputStream, OutputStream}
+import java.net.{InetAddress, ServerSocket, Socket, SocketTimeoutException}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -413,12 +414,13 @@ class MqttSpec extends AnyFunSuite {
   }
 
   /** A raw-socket broker for one client: `client` runs on its own thread
-    * once the peer's CONNACK is out; `peer` then reads and acks by hand.
-    * Returns what the client thread threw, if anything. */
-  private def withRawBroker(client: Int => Unit)
+    * once the peer's CONNACK (`connack`) is out; `peer` then reads and
+    * acks by hand. Returns what the client thread threw, if anything. */
+  private def withRawBroker(client: Int => Unit,
+      connack: Array[Byte] = Array[Byte]((Mqtt.CONNACK << 4).toByte, 2, 0, 0))
       (peer: Socket => Unit): Option[Throwable] = {
     val server = new ServerSocket(0, 1, InetAddress.getLoopbackAddress)
-    val thrown = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val thrown = new AtomicReference[Throwable]
     val t = new Thread(() =>
       try client(server.getLocalPort)
       catch { case e: Throwable => thrown.set(e) }, "raw-broker-client")
@@ -429,7 +431,7 @@ class MqttSpec extends AnyFunSuite {
       sock.setSoTimeout(20000)
       val (in, out) = (sock.getInputStream, sock.getOutputStream)
       assert((Mqtt.readPacket(in)._1 >> 4) == Mqtt.CONNECT)
-      out.write(Array[Byte]((Mqtt.CONNACK << 4).toByte, 2, 0, 0))
+      out.write(connack)
       out.flush()
       peer(sock)
       t.join(30000)
@@ -532,6 +534,47 @@ class MqttSpec extends AnyFunSuite {
         "only DUP=1 copies of the one packet")
       assert(copies.size == Mqtt.MaxRetransmits)
     }
+    assert(thrown.exists(_.isInstanceOf[java.io.IOException]),
+      s"expected an IOException, got $thrown")
+  }
+
+  test("the client fails the connection on a malformed PUBLISH as the " +
+      "broker does: QoS 3, QoS 2 or packet id 0 at QoS 1 closes it " +
+      "without running the callback or sending a PUBACK") {
+    Seq((3, 7), (2, 7), (1, 0)).foreach { case (qos, id) =>
+      val calls = new AtomicInteger
+      val client = new AtomicReference[MqttClient]
+      val thrown = withRawBroker { port =>
+        client.set(new MqttClient("127.0.0.1", port, s"bad-$qos").connect())
+        client.get.subscribe("graft/in/#")((_, _) => calls.incrementAndGet())
+      } { sock =>
+        val (in, out) = (sock.getInputStream, sock.getOutputStream)
+        val (h, b) = Mqtt.readPacket(in)
+        assert((h >> 4) == Mqtt.SUBSCRIBE)
+        out.write(Mqtt.packet(Mqtt.SUBACK << 4, b.take(2) :+ 1.toByte))
+        out.write(Mqtt.publishPacket("graft/in/t", "x".getBytes(UTF_8),
+          qos, id, dup = false))
+        out.flush()
+        sock.setSoTimeout(5000)
+        val next =
+          try s"packet type ${Mqtt.readPacket(in)._1 >> 4}"
+          catch {
+            case _: EOFException => "EOF"
+            case _: SocketTimeoutException => "nothing within 5 s"
+          }
+        assert(next == "EOF", s"QoS $qos id $id: expected EOF, got $next")
+      }
+      Option(client.get).foreach(_.disconnect())
+      assert(thrown.isEmpty, s"QoS $qos id $id: client threw $thrown")
+      assert(calls.get == 0, s"QoS $qos id $id: the callback ran")
+    }
+  }
+
+  test("a CONNACK body shorter than 2 bytes makes connect() throw an " +
+      "IOException") {
+    val thrown = withRawBroker(
+      port => new MqttClient("127.0.0.1", port, "short-connack").connect(),
+      connack = Array[Byte]((Mqtt.CONNACK << 4).toByte, 1, 0))(_ => ())
     assert(thrown.exists(_.isInstanceOf[java.io.IOException]),
       s"expected an IOException, got $thrown")
   }
