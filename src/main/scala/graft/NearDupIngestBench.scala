@@ -1,13 +1,12 @@
 package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.{MqttBroker, MqttClient, MqttSink, PartitionedMqttBus}
-import graft.streaming.NearDupStream
+import graft.streaming.{Monitoring, NearDupStream}
 
 /** End-to-end PARTITIONED streaming pipeline (r11 verdict item #5 — the
   * composition of the two r11 wins): documents published over a live
@@ -24,13 +23,14 @@ import graft.streaming.NearDupStream
   * Reports docs/second from first publish to the last doc landing in
   * the pipeline, per lane count: does the WHOLE ingest chain scale with
   * lanes, or only the raw socket path? Honesty rails: the source-row
-  * count must equal the published count EXACTLY (listener-accumulated
-  * numInputRows — a lane-log drop fails the run), zero lane-log drops,
-  * and the end-to-end pair SET received over MQTT must equal the batch
-  * q_dedup_pairs relation on the same corpus (at-least-once duplicates
-  * collapse by set identity) — so a faster configuration can never buy
-  * its rate with silent loss. Run at BOTH sf0.01 and sf0.1 so fixed
-  * drain cost separates from marginal per-doc cost.
+  * count must equal the published count EXACTLY (numInputRows summed
+  * over the query's [[Monitoring]] reports — a lane-log drop fails the
+  * run), zero lane-log drops, and the end-to-end pair SET received
+  * over MQTT must equal the batch q_dedup_pairs relation on the same
+  * corpus (at-least-once duplicates collapse by set identity) — so a
+  * faster configuration can never buy its rate with silent loss. Run
+  * at BOTH sf0.01 and sf0.1 so fixed drain cost separates from
+  * marginal per-doc cost.
   *
   * Run: sbt "runMain graft.NearDupIngestBench [sfDir]"
   * (SPARK_GRAFT_CPUS, default 4).
@@ -59,6 +59,7 @@ object NearDupIngestBench {
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     spark.range(100000L).selectExpr("sum(id)").collect()
+    val monitoring = new Monitoring().attach(spark)
 
     def run(lanes: Int): (Double, Double) = {
       val broker = new MqttBroker().start()
@@ -76,17 +77,6 @@ object NearDupIngestBench {
           case _            => ()
         }
       }
-      val landed = new AtomicLong(0L)
-      val listener = new StreamingQueryListener {
-        override def onQueryStarted(
-            e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryProgress(
-            e: StreamingQueryListener.QueryProgressEvent): Unit =
-          landed.addAndGet(e.progress.numInputRows)
-        override def onQueryTerminated(
-            e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      }
-      spark.streams.addListener(listener)
       val stream = bus.subscribe(spark)
         .select(col("event_id").as("doc_id"), col("props").as("text"))
       val pairs = NearDupStream.nearDupPairsStream(stream, docs)
@@ -98,6 +88,8 @@ object NearDupIngestBench {
           _ => "graft/ndpairs/out")
         .trigger(Trigger.ProcessingTime("200 milliseconds"))
         .start()
+      def landed: Long =
+        monitoring.reports(q.id.toString).map(_.numInputRows).sum
       try {
         Thread.sleep(1500) // socket readers must be connected
         val producers = 8
@@ -120,11 +112,11 @@ object NearDupIngestBench {
         }
         threads.foreach(_.join())
         val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
-        while (landed.get() < nDocs && System.nanoTime() < deadline)
+        while (landed < nDocs && System.nanoTime() < deadline)
           Thread.sleep(50)
         val dt = (System.nanoTime() - t0) / 1e9
-        require(landed.get() == nDocs,
-          s"lanes=$lanes: landed ${landed.get()} != published $nDocs " +
+        require(landed == nDocs,
+          s"lanes=$lanes: landed $landed != published $nDocs " +
             s"(dropped=${bus.dropped}) — loss or dup, run is invalid")
         require(bus.dropped == 0, s"lanes=$lanes: lane-log drops")
         // drain the tail: wait until the received pair set is stable
@@ -142,7 +134,6 @@ object NearDupIngestBench {
         (dt, nDocs / dt)
       } finally {
         try q.stop() catch { case _: Throwable => () }
-        spark.streams.removeListener(listener)
         rep.disconnect()
         bus.close()
         broker.stop()

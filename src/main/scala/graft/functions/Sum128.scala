@@ -29,9 +29,8 @@ import org.apache.spark.sql.types._
   * two's-complement sum — headroom to ±1.7e38 scaled units vs the
   * plain-long alternative's ±9.2e18 (which a 100 TB group CAN exceed:
   * 6e11 lineitem rows × 1e9 scaled units ≈ 6e20 — the r13
-  * measured-then-rejected trade). The 64-bit limb add is performed in
-  * 32-bit halves (shifts and bitwise ops never overflow), so wrap-around
-  * of the low limb is deliberate and its carry is propagated; the HIGH
+  * measured-then-rejected trade). The low-limb add is built in LEGACY
+  * eval mode, so it wraps mod 2^64 and its carry is propagated; the HIGH
   * limb adds are built in ANSI eval mode, so a genuine 128-bit overflow
   * (needs ~2^64 max-magnitude rows — physically unreachable) throws
   * rather than wrapping. The finalizer throws when the total does not
@@ -101,18 +100,10 @@ case class Sum128(child: Expression, scaleExpr: Expression)
   override lazy val initialValues: Seq[Expression] =
     Seq(Literal(0L), Literal(0L), Literal(false))
 
-  /** Wrapping 64-bit add in 32-bit halves, so no long add can overflow
-    * (each partial sum < 2^34) and the 2^64 wrap of the low limb is
-    * reproduced exactly. */
-  private def wadd(a: Expression, b: Expression): Expression = {
-    val mask = Literal(0xffffffffL)
-    val loSum = Add(BitwiseAnd(a, mask), BitwiseAnd(b, mask))
-    val hiSum = Add(
-      Add(ShiftRightUnsigned(a, Literal(32)),
-        ShiftRightUnsigned(b, Literal(32))),
-      ShiftRightUnsigned(loSum, Literal(32)))
-    BitwiseOr(ShiftLeft(hiSum, Literal(32)), BitwiseAnd(loSum, mask))
-  }
+  /** A long add that wraps mod 2^64 whatever the session's ANSI
+    * setting: the low limb's wrap is deliberate, its carry is [[carry]]. */
+  private def wrappingAdd(a: Expression, b: Expression): Expression =
+    Add(a, b, EvalMode.LEGACY)
 
   /** Carry-out of the unsigned 64-bit add a + b = s. */
   private def carry(a: Expression, b: Expression,
@@ -128,7 +119,7 @@ case class Sum128(child: Expression, scaleExpr: Expression)
 
   override lazy val updateExpressions: Seq[Expression] = {
     val v = unscaled
-    val newLo = wadd(lo, v)
+    val newLo = wrappingAdd(lo, v)
     // sign-extend v to 128 bits (vHi = v >> 63 ∈ {0, −1}); the high
     // limb uses CHECKED adds — unreachable 128-bit overflow is loud
     val newHi =
@@ -141,7 +132,7 @@ case class Sum128(child: Expression, scaleExpr: Expression)
   }
 
   override lazy val mergeExpressions: Seq[Expression] = {
-    val newLo = wadd(lo.left, lo.right)
+    val newLo = wrappingAdd(lo.left, lo.right)
     val newHi = checkedAdd(checkedAdd(hi.left, hi.right),
       carry(lo.left, lo.right, newLo))
     Seq(newHi, newLo, Or(seen.left, seen.right))

@@ -8,6 +8,7 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods
 
 import graft.streaming.Monitoring
+import graft.streaming.Monitoring.quote
 
 /** REST control plane over [[TemplateRegistry]] + [[Monitoring]] — the
   * reference exposes template CRUD/versioning over aiohttp REST and
@@ -164,7 +165,7 @@ final class HttpControlPlane(registry: TemplateRegistry,
         case ("GET", "reports" :: queryId :: Nil) =>
           val rs = monitoring.map(_.reports(queryId)).getOrElse(Nil)
           respond(ex, 200,
-            rs.map(reportJson).mkString("[", ",", "]"))
+            rs.map(_.json).mkString("[", ",", "]"))
         case ("GET", "events" :: Nil) =>
           sse(ex)
         case ("GET", "instances" :: Nil) =>
@@ -207,20 +208,12 @@ final class HttpControlPlane(registry: TemplateRegistry,
         // the subscriber runs on the listener-bus thread; a broken pipe
         // throws there and Monitoring drops the subscriber for us
         m.subscribe { r =>
-          out.write(s"data: ${reportJson(r)}\n\n".getBytes(UTF_8))
+          out.write(s"data: ${r.json}\n\n".getBytes(UTF_8))
           out.flush()
         }
         () // exchange intentionally left open
     }
   }
-
-  private def reportJson(r: Monitoring#Report): String =
-    s"""{"queryId":${quote(r.queryId)},"runId":${quote(r.runId)},""" +
-      s""""batchId":${r.batchId},"numInputRows":${r.numInputRows},""" +
-      s""""durationMs":${r.durationMs},"stateRows":${r.stateRows}}"""
-
-  private def quote(s: String): String =
-    JsonMethods.compact(JsonMethods.render(JString(s)))
 
   private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
     val bytes = body.getBytes(UTF_8)

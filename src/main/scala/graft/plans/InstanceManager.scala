@@ -29,15 +29,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * thread (that is its point).
   */
 final class InstanceManager(spark: SparkSession) {
+  import InstanceManager._
 
   final class InstanceCancelledException(id: String)
     extends RuntimeException(
       s"instance '$id' was cancelled while executing")
-
-  private sealed trait Handle
-  private final case class Batch(group: String, cancelled: AtomicBoolean)
-    extends Handle
-  private final case class Stream(query: StreamingQuery) extends Handle
 
   private val running = TrieMap.empty[String, Handle]
 
@@ -144,4 +140,11 @@ final class InstanceManager(spark: SparkSession) {
   }
 
   def active: Set[String] = { prune(); running.keySet.toSet }
+}
+
+object InstanceManager {
+  private sealed trait Handle
+  private final case class Batch(group: String, cancelled: AtomicBoolean)
+    extends Handle
+  private final case class Stream(query: StreamingQuery) extends Handle
 }

@@ -24,7 +24,8 @@ import graft.streaming.Monitoring
   *   - HTTP GET upgrade with `Sec-WebSocket-Key` → 101 +
   *     `Sec-WebSocket-Accept` = Base64(SHA1(key ++ RFC-GUID))
   *   - every [[Monitoring.Report]] → one unfragmented TEXT frame
-  *     (FIN=1, opcode 1) carrying the same JSON the SSE stream emits
+  *     (FIN=1, opcode 1) carrying `Report.json`, the bytes the SSE
+  *     stream emits
   *   - client PING → PONG with the echoed (unmasked) payload
   *   - client CLOSE (or EOF / broken pipe) → close frame echoed,
   *     socket closed, subscriber dropped from the listener bus
@@ -108,7 +109,7 @@ final class WebSocketPush(monitoring: Monitoring, port: Int = 0) {
         sock.setSoTimeout(0) // upgraded: the control loop blocks freely
         // push half: one TEXT frame per report; a broken pipe throws on
         // the listener bus and Monitoring drops the subscriber
-        val unsub = monitoring.subscribe(r => sendText(out, reportJson(r)))
+        val unsub = monitoring.subscribe(r => sendText(out, r.json))
         val reader = new Thread(() => controlLoop(sock, in, out, unsub),
           "graft-ws-reader")
         reader.setDaemon(true)
@@ -232,18 +233,4 @@ final class WebSocketPush(monitoring: Monitoring, port: Int = 0) {
     out.write(payload)
     out.flush()
   }
-
-  /** Same JSON shape the SSE bridge emits (HttpControlPlane) — one
-    * monitoring feed, two transports. String fields are escaped through
-    * the same json4s writer the HTTP plane uses: today they are Spark
-    * UUIDs, but the frame must stay well-formed if a report ever
-    * carries a user-supplied query name through this path. */
-  private def reportJson(r: Monitoring#Report): String =
-    s"""{"queryId":${quote(r.queryId)},"runId":${quote(r.runId)},""" +
-      s""""batchId":${r.batchId},"numInputRows":${r.numInputRows},""" +
-      s""""durationMs":${r.durationMs},"stateRows":${r.stateRows}}"""
-
-  private def quote(s: String): String =
-    org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(org.json4s.JString(s)))
 }

@@ -26,7 +26,7 @@ import graft.plans.TopicMatch
   * Protocol surface (deliberately scoped to the bus contract):
   *   - CONNECT/CONNACK (protocol level 4, clean-session only — the
   *     broker is a live bus, durable replay is the checkpointed file
-  *     sink's job, Sources.fileSink);
+  *     sink's job, [[graft.streaming.EventPipelines.sink]]);
   *   - SUBSCRIBE/SUBACK + UNSUBSCRIBE/UNSUBACK with full MQTT wildcard
   *     filters — matching is [[graft.plans.TopicMatch]], the SAME
   *     definition trigger routing uses, so a broker subscription and a
@@ -220,8 +220,8 @@ private[sources] class PacketWriter(out: OutputStream) {
 final class MqttBroker(port: Int = 0) {
   import Mqtt._
 
-  private final case class Pending(topic: String, payload: Array[Byte],
-      var deadlineNanos: Long, retain: Boolean)
+  private final class Pending(val topic: String, val payload: Array[Byte],
+      var deadlineNanos: Long, val retain: Boolean)
 
   private final class Conn(val sock: Socket)
       extends PacketWriter(sock.getOutputStream) {
@@ -406,7 +406,7 @@ final class MqttBroker(port: Int = 0) {
     try {
       val id = if (qos == 0) 0 else {
         val id = allocId(c.nextId, c.pending)
-        c.pending.put(Integer.valueOf(id), Pending(topic, payload,
+        c.pending.put(Integer.valueOf(id), new Pending(topic, payload,
           System.nanoTime() + RetransmitMs * 1000000L, retain))
         id
       }
@@ -590,7 +590,7 @@ final class MqttClient(host: String, port: Int,
   * key", which is what its at-least-once redelivery required of
   * consumers too.
   * Exactly-once stays the checkpointed FILE sink's contract
-  * ([[Sources.fileSink]]). */
+  * ([[graft.streaming.EventPipelines.sink]]). */
 object MqttSink {
   import org.apache.spark.sql.Encoders
   import org.apache.spark.sql.functions.{col, struct, to_json}

@@ -1,93 +1,16 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.DataStreamWriter
-import org.apache.spark.sql.types.StructType
 
-/** Source/sink catalog — the engine's I/O surface beyond the fixture
-  * parquet: JSON-lines (the reference's bus payloads ARE json objects),
-  * CSV, and parquet, each in batch and streaming form with explicit
-  * schemas (schema inference is a full extra pass at 100 TB — never
-  * inferred here).
-  *
-  * The reference's bus (MQTT JSON messages) maps to [[jsonStream]]: a
-  * directory fed by a collector behaves exactly like a topic replay; a
-  * Kafka source swaps in with the same downstream schema contract.
+/** The bus seam, [[BusSource]], and its connectors on Spark's built-in
+  * sources: [[FileReplayBus]], [[RateBus]] and [[SocketJsonBus]]. The
+  * MQTT connectors, [[MqttBus]] and [[PartitionedMqttBus]], are in
+  * Mqtt.scala. Event schemas are given, never inferred (inference is a
+  * full extra pass over the input). File reads and writes off the bus
+  * call Spark's `read`/`write` directly; the one checkpointed file sink
+  * is [[graft.streaming.EventPipelines.sink]].
   */
 object Sources {
-
-  // ---- batch -----------------------------------------------------------
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  def jsonLines(spark: SparkSession, path: String,
-      schema: StructType): DataFrame =
-    spark.read.schema(schema).json(path)
-
-  def csv(spark: SparkSession, path: String, schema: StructType,
-      header: Boolean = true, delimiter: String = ","): DataFrame =
-    spark.read.schema(schema)
-      .option("header", header.toString)
-      .option("delimiter", delimiter)
-      .csv(path)
-
-  def writeParquet(df: DataFrame, path: String,
-      partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(path)
-  }
-
-  /** ORC — the other columnar format Spark ships natively; same pushdown
-    * and vectorized-read properties as parquet. */
-  def orc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
-  def writeOrc(df: DataFrame, path: String,
-      partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .orc(path)
-  }
-
-  def writeJsonLines(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
-
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(path)
-
-  /** Multimodal ingest: whole files as (path, modificationTime, length,
-    * content binary) — the real on-ramp for image/audio payloads into
-    * [[graft.operators.Multimodal]]'s binary-column contract. */
-  def binaryFiles(spark: SparkSession, pathGlob: String): DataFrame =
-    spark.read.format("binaryFile").load(pathGlob)
-
-  // ---- streaming -------------------------------------------------------
-  def parquetStream(spark: SparkSession, dir: String, schema: StructType,
-      maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(dir)
-
-  /** Bus-shaped source: one JSON object per line, explicit schema. */
-  def jsonStream(spark: SparkSession, dir: String, schema: StructType,
-      maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).json(dir)
-
-  def csvStream(spark: SparkSession, dir: String, schema: StructType,
-      maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream.schema(schema)
-      .option("header", "true")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).csv(dir)
-
-  /** Checkpointed exactly-once file sink (format ∈ parquet|json|csv). */
-  def fileSink(df: DataFrame, format: String, path: String,
-      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream.format(format)
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-
-  // ---- bus connector seam (R1) ----------------------------------------
 
   /** ANY bus technology behind ONE interface producing the canonical
     * event stream ([[graft.streaming.EventPipelines.eventSchema]]).
@@ -111,8 +34,8 @@ object Sources {
   final case class FileReplayBus(dir: String, maxFilesPerTrigger: Int = 1)
       extends BusSource {
     def subscribe(spark: SparkSession): DataFrame =
-      parquetStream(spark, dir,
-        graft.streaming.EventPipelines.eventSchema, maxFilesPerTrigger)
+      spark.readStream.schema(graft.streaming.EventPipelines.eventSchema)
+        .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(dir)
   }
 
   /** Live-connector stand-in on Spark's built-in unbounded `rate`

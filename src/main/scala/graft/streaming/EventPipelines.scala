@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 
 import graft.operators.StreamShapes
@@ -115,13 +115,4 @@ object EventPipelines {
       .option("checkpointLocation", checkpoint)
       .format("parquet")
       .option("path", outDir)
-
-  /** Run a pipeline over the full replay and block until the source is
-    * drained (used by tests and ad-hoc runs). */
-  def runToCompletion(writer: DataStreamWriter[org.apache.spark.sql.Row])
-      : StreamingQuery = {
-    val q = writer.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
-  }
 }

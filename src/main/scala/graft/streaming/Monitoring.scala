@@ -4,6 +4,8 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.json4s.JString
+import org.json4s.jackson.JsonMethods.{compact, render}
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 
 /** Instance history + monitoring (R18): the reference stores per-task
@@ -19,11 +21,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * attach by draining [[reports]] or subclassing.
   */
 final class Monitoring extends StreamingQueryListener {
-
-  final case class Report(queryId: String, runId: String, batchId: Long,
-      numInputRows: Long, processedRowsPerSecond: Double,
-      durationMs: Long, eventTimeWatermark: Option[String],
-      stateRows: Long)
+  import Monitoring.Report
 
   private val started = TrieMap.empty[String, String] // queryId -> name
   private val history = TrieMap.empty[String, Vector[Report]]
@@ -82,4 +80,28 @@ final class Monitoring extends StreamingQueryListener {
   }
 
   def detach(spark: SparkSession): Unit = spark.streams.removeListener(this)
+}
+
+object Monitoring {
+
+  /** One micro-batch's execution report. */
+  final case class Report(queryId: String, runId: String, batchId: Long,
+      numInputRows: Long, processedRowsPerSecond: Double,
+      durationMs: Long, eventTimeWatermark: Option[String],
+      stateRows: Long) {
+
+    /** The report's wire form, the same bytes on every channel: the SSE
+      * `data:` frame and `GET /reports/{id}` on
+      * [[graft.plans.HttpControlPlane]], and the WebSocket TEXT frame on
+      * [[graft.plans.WebSocketPush]]. String fields go through json4s's
+      * escaping: today they are Spark UUIDs, but the JSON must stay
+      * well-formed if a report ever carries a user-supplied name. */
+    def json: String =
+      s"""{"queryId":${quote(queryId)},"runId":${quote(runId)},""" +
+        s""""batchId":$batchId,"numInputRows":$numInputRows,""" +
+        s""""durationMs":$durationMs,"stateRows":$stateRows}"""
+  }
+
+  /** `s` as a JSON string literal. */
+  def quote(s: String): String = compact(render(JString(s)))
 }

@@ -759,6 +759,84 @@ class ControlPlaneSpec extends SparkSpec {
     } finally { srv.stop(); mon.detach(spark) }
   }
 
+  test("one monitoring report is the same bytes on every channel: the " +
+      "SSE data frame, the WebSocket text frame and GET /reports/{id}") {
+    import java.net.URI
+    import java.net.http.{HttpClient, HttpRequest, HttpResponse, WebSocket}
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val mon = new Monitoring().attach(spark)
+    val plane = new graft.plans.HttpControlPlane(
+      new TemplateRegistry, Some(mon)).start()
+    val push = new graft.plans.WebSocketPush(mon).start()
+    try {
+      val http = HttpClient.newHttpClient()
+      val sse = new LinkedBlockingQueue[String]
+      val sseDone = http.sendAsync(
+        HttpRequest.newBuilder()
+          .uri(URI.create(s"http://127.0.0.1:${plane.boundPort}/events"))
+          .GET().build(),
+        HttpResponse.BodyHandlers.fromLineSubscriber(
+          new java.util.concurrent.Flow.Subscriber[String] {
+            def onSubscribe(s: java.util.concurrent.Flow.Subscription)
+                : Unit = s.request(Long.MaxValue)
+            def onNext(item: String): Unit = { sse.add(item); () }
+            def onError(t: Throwable): Unit = ()
+            def onComplete(): Unit = ()
+          }))
+      val hello = sse.poll(10, TimeUnit.SECONDS)
+      assert(hello != null && hello.startsWith(":"), s"no SSE hello: $hello")
+      val ws = new LinkedBlockingQueue[String]
+      val socket = http.newWebSocketBuilder()
+        .buildAsync(URI.create(s"ws://127.0.0.1:${push.boundPort}/events"),
+          new WebSocket.Listener {
+            override def onText(w: WebSocket, data: CharSequence,
+                last: Boolean): java.util.concurrent.CompletionStage[_] = {
+              ws.add(data.toString); w.request(1); null
+            }
+          })
+        .join()
+      val mem = MemoryStream[Long]
+      mem.addData(1L to 7L: _*)
+      val q = mem.toDF().groupBy().count()
+        .writeStream.format("memory")
+        .queryName(s"bytes_${System.nanoTime()}")
+        .outputMode("complete").start()
+      try q.processAllAvailable() finally q.stop()
+      // the first report of this query on each push channel
+      val ofQuery = s"\"queryId\":\"${q.id}\""
+      def firstOf(frames: LinkedBlockingQueue[String],
+          strip: String): String = {
+        val deadline = System.nanoTime() + 30_000_000_000L
+        var got: String = null
+        while (got == null && System.nanoTime() < deadline) {
+          val f = frames.poll(200, TimeUnit.MILLISECONDS)
+          if (f != null && f.startsWith(strip) && f.contains(ofQuery))
+            got = f.stripPrefix(strip)
+        }
+        assert(got != null, s"no report frame within 30s ($strip)")
+        got
+      }
+      val viaSse = firstOf(sse, "data: ")
+      val viaWs = firstOf(ws, "")
+      val pulled = http.send(HttpRequest.newBuilder()
+        .uri(URI.create(
+          s"http://127.0.0.1:${plane.boundPort}/reports/${q.id}"))
+        .GET().build(), HttpResponse.BodyHandlers.ofString()).body()
+      val first = mon.reports(q.id.toString).head
+      assert(viaSse == first.json)
+      assert(viaWs == viaSse)
+      assert(pulled.startsWith("[" + viaSse) &&
+        ",]".contains(pulled.charAt(viaSse.length + 1)), pulled)
+      assert(viaSse.contains("\"numInputRows\":7"), viaSse)
+      socket.sendClose(WebSocket.NORMAL_CLOSURE, "done").join()
+      sseDone.cancel(true)
+    } finally {
+      push.stop(); plane.stop(); mon.detach(spark)
+    }
+  }
+
   test("deterministic-sum rule makes sum(double) partition-invariant " +
       "and equal to the explicit decimal form") {
     // Extensions only apply at session CREATION: clear the fixture

@@ -5,8 +5,6 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.Sources
-
 class FunctionsAndSourcesSpec extends SparkSpec {
   import spark.implicits._
 
@@ -180,51 +178,6 @@ class FunctionsAndSourcesSpec extends SparkSpec {
     val outW = nullsW.select(expr("decimal_wdot(a, b)")).collect()
     assert(outW(0).isNullAt(0))
     assert(outW(1).isNullAt(0))
-  }
-
-  test("json-lines round trip (bus-payload shape) batch and stream") {
-    val dir = Files.createTempDirectory("graft_json").toString
-    val events = Tables.table(spark, sf, "events").limit(100)
-    Sources.writeJsonLines(events, s"$dir/out")
-    val schema = events.schema
-    val back = Sources.jsonLines(spark, s"$dir/out", schema)
-    assert(back.count() == 100)
-    // streaming read of the same directory drains to the same count
-    val sink = s"jsrt_${System.nanoTime()}"
-    val q = Sources.jsonStream(spark, s"$dir/out", schema, 8)
-      .writeStream.format("memory").queryName(sink)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    assert(spark.table(sink).count() == 100)
-  }
-
-  test("csv round trip with explicit schema") {
-    val dir = Files.createTempDirectory("graft_csv").toString
-    val nation = Tables.table(spark, sf, "nation")
-    Sources.writeCsv(nation, s"$dir/out")
-    val back = Sources.csv(spark, s"$dir/out", nation.schema)
-    assert(back.count() == 25)
-    assert(back.schema == nation.schema)
-  }
-
-  test("orc round trip preserves rows, schema, and filter pushdown") {
-    val dir = Files.createTempDirectory("graft_orc").toString
-    val orders = Tables.table(spark, sf, "orders")
-    Sources.writeOrc(orders, s"$dir/out")
-    val back = Sources.orc(spark, s"$dir/out")
-    assert(back.count() == orders.count())
-    assert(back.schema == orders.schema)
-    // data values survive the round trip (exact-decimal checksum)
-    val csum = (df: org.apache.spark.sql.DataFrame) => df
-      .selectExpr("CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS STRING)")
-      .head.getString(0)
-    assert(csum(back) == csum(orders))
-    // ORC scans take pushed filters like parquet
-    val plan = back.filter(col("o_orderkey") < 100)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [IsNotNull(o_orderkey), " +
-      "LessThan(o_orderkey,100)]"), plan)
   }
 
   test("hive-partitioned parquet: a partition-key predicate becomes a " +

@@ -76,8 +76,7 @@ class LayoutSpec extends SparkSpec {
       .createTempDirectory("graft_part").toString
     val ev = Tables.table(spark, sf, "events")
       .select("event_id", "event_type", "value")
-    graft.sources.Sources.writeParquet(ev, tmp,
-      partitionBy = Seq("event_type"))
+    ev.write.mode("overwrite").partitionBy("event_type").parquet(tmp)
     val read = spark.read.parquet(tmp)
       .filter(col("event_type") === "purchase")
     val plan = read.queryExecution.executedPlan.toString

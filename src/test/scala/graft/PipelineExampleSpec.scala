@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.examples.TrainingDataPipeline
-import graft.sources.Sources
 
 class PipelineExampleSpec extends SparkSpec {
   import spark.implicits._
@@ -21,7 +20,7 @@ class PipelineExampleSpec extends SparkSpec {
   }
 
   test("binaryFile source reads whole files as binary rows") {
-    val df = Sources.binaryFiles(spark, s"$sf/documents.parquet")
+    val df = spark.read.format("binaryFile").load(s"$sf/documents.parquet")
     val row = df.select("path", "length", "content").head
     assert(row.getAs[Long]("length") > 0)
     assert(row.getAs[Array[Byte]]("content").length ==

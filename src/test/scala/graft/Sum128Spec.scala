@@ -55,14 +55,14 @@ class Sum128Spec extends SparkSpec {
     }
   }
 
-  test("sum128 carries exactly past the 64-bit boundary of scaled " +
-      "units (the plain-long overflow cliff)") {
-    // 4000 × ±9.9e13 at scale 4 → |scaled| partials cross 2^63 ≈ 9.2e18
-    // many times; signs alternate with a positive bias so intermediate
-    // magnitudes wander both ways across the boundary
+  /** 4000 × ±9.9e13 at scale 4 → |scaled| partials cross 2^63 ≈ 9.2e18
+    * many times; signs alternate with a positive bias so intermediate
+    * magnitudes wander both ways across the boundary. */
+  private def assertCarriesPast64Bits(session: SparkSession): Unit = {
     val xs = (1 to 4000).map(i =>
       if (i % 3 == 0) -99999999999999.53 else 99999999999999.53)
-    val rows = xs.toDF("x").repartition(16)
+    val rows = session.createDataFrame(xs.map(Tuple1(_))).toDF("x")
+      .repartition(16)
       .agg(expr(natSql(4)).as("nat"), expr(refSql(4)).as("ref"))
       .collect()
     val r = rows.head
@@ -71,6 +71,11 @@ class Sum128Spec extends SparkSpec {
       s"nat=${r.get(0)} ref=${r.get(1)}")
     // sanity: the total really is past the plain-long cliff
     assert(math.abs(r.getDouble(1)) > 1.2e17)
+  }
+
+  test("sum128 carries exactly past the 64-bit boundary of scaled " +
+      "units (the plain-long overflow cliff)") {
+    assertCarriesPast64Bits(spark)
   }
 
   test("sum128 is NULL on an all-NULL group and on an empty relation, " +
@@ -172,6 +177,11 @@ class Sum128Spec extends SparkSpec {
       BindReferences.bindReference(e, attrs).eval(row))
     intercept[ArithmeticException](
       UnsafeProjection.create(Seq(e), attrs).apply(row))
+  }
+
+  test("ANSI off: sum128's low-limb add wraps and carries exactly past " +
+      "the 64-bit boundary") {
+    withAnsiOff(assertCarriesPast64Bits)
   }
 
   test("ANSI off: Det.dsumProd4 throws on a row whose scaled product " +
