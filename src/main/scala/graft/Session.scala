@@ -2,7 +2,7 @@ package graft
 
 import org.apache.logging.log4j.Level
 import org.apache.logging.log4j.core.config.Configurator
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSession
 
 /** The engine's local session policy, in one place: every main, example
   * and spec takes its session from [[Session.local]], never from its own
@@ -28,11 +28,6 @@ object Session {
   /** `local[cpus]` with `cpus` shuffle partitions, session time zone UTC
     * (SURVEY §7.4), no UI, WARN logging, then `conf` on top.
     *
-    * `spark.sql.extensions` in `conf` applies to this session even when a
-    * SparkContext is already running (Spark reads that static setting only
-    * when the context starts); the classes are installed through the
-    * builder instead of the shared context's conf.
-    *
     * The allowlisted bounded-frame global windows (PlanRegressionSpec
     * pins exactly one unpartitioned WindowExec on 4 queries, each over a
     * day-grain/value-bucket frame bounded by time span or value domain,
@@ -40,19 +35,13 @@ object Session {
     * warning. The plan gate already audits those nodes, so exactly that
     * logger package logs at ERROR. */
   def local(cpus: Int, conf: (String, String)*): SparkSession = {
-    val (extensions, settings) =
-      conf.partition(_._1 == "spark.sql.extensions")
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config(settings.toMap)
-    extensions.flatMap(_._2.split(',')).foreach { cls =>
-      builder.withExtensions(Class.forName(cls.trim).getConstructor()
-        .newInstance().asInstanceOf[SparkSessionExtensions => Unit])
-    }
-    val spark = builder.getOrCreate()
+      .config(conf.toMap)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Configurator.setLevel("org.apache.spark.sql.execution.window",
       Level.ERROR)

@@ -1,7 +1,14 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
 /** Table loaders shared by every operator. One parquet file per table
   * (TESTDATA.md); at production scale these would be partitioned
@@ -12,41 +19,82 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Each table's Spark schema, read from one parquet footer once per
+    * state of that file (qualified path, length, mtime) and per value of
+    * the session settings the footer conversion reads. A read with a
+    * given schema starts no schema-inference job. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[Any, StructType]()
+
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val df = spark.read.schema(schemaOf(spark, path)).parquet(path)
     if (name == "events") {
       // events.ts has shipped as both parquet TIMESTAMP(NANOS) and
-      // TIMESTAMP(MICROS) across driver testdata generations. Nanos are
-      // rejected by Spark's reader unless read as the physical INT64
-      // (legacy nanosAsLong), then floored to microseconds — exactly what
-      // DuckDB does with the same file (verified: truncation, not
-      // rounding). Micros map straight to a timestamp column. Sniff the
-      // inferred schema and convert only when the legacy conf kicked in;
-      // the conf only matters during the eager schema conversion inside
-      // spark.read.parquet, so it is restored immediately.
-      val key = "spark.sql.legacy.parquet.nanosAsLong"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "true")
-      try {
-        val df = spark.read.parquet(s"$sfDir/$name.parquet")
-        df.schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType =>
-            df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-          case org.apache.spark.sql.types.TimestampNTZType =>
-            // µs-precision but NTZ: downstream code (unix_micros, windows)
-            // requires TIMESTAMP(ltz). The session timezone is pinned UTC
-            // on both engines (SURVEY §7.4), so the cast preserves the
-            // wall-clock value bit-for-bit and matches DuckDB's naive read.
-            df.withColumn("ts", col("ts").cast("timestamp"))
-          case _ => df // already µs-precision TIMESTAMP
-        }
-      } finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
+      // TIMESTAMP(MICROS) across testdata generations. Spark's
+      // reader rejects nanos unless they map to the physical INT64
+      // (schemaOf converts the footer that way), then truncated to
+      // microseconds — exactly what DuckDB does with the same file
+      // (TablesSpec: toward zero, not rounding or flooring). Micros map
+      // straight to a timestamp column.
+      df.schema("ts").dataType match {
+        case LongType =>
+          df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+        case TimestampNTZType =>
+          // µs-precision but NTZ: downstream code (unix_micros, windows)
+          // requires TIMESTAMP(ltz). The session timezone is pinned UTC
+          // on both engines (SURVEY §7.4), so the cast preserves the
+          // wall-clock value bit-for-bit and matches DuckDB's naive read.
+          df.withColumn("ts", col("ts").cast("timestamp"))
+        case _ => df // already µs-precision TIMESTAMP
       }
-    } else {
-      spark.read.parquet(s"$sfDir/$name.parquet")
-    }
+    } else df
   }
+
+  /** The schema Spark would infer for the parquet table at `path` (a
+    * file, or a directory whose first data file by path stands for all,
+    * as in Spark's inference without schema merging), except that
+    * TIMESTAMP(NANOS) columns map to their INT64 (what the legacy
+    * `spark.sql.legacy.parquet.nanosAsLong` gives). Reading with that
+    * schema needs no flag, so the caller's session conf is never
+    * written. */
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val c = spark.sessionState.conf
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val fs = p.getFileSystem(hadoopConf)
+    val files = dataFiles(fs, fs.getFileStatus(p))
+    require(files.hasNext, s"no parquet data file in $path")
+    val st = files.minBy(_.getPath.toString)
+    val key = (st.getPath.toString, st.getLen, st.getModificationTime,
+      c.isParquetBinaryAsString, c.isParquetINT96AsTimestamp,
+      c.caseSensitiveAnalysis, c.parquetInferTimestampNTZEnabled,
+      c.parquetFieldIdReadEnabled, c.parquetIgnoreVariantAnnotation,
+      c.parquetReaderRespectUnknownTypeAnnotation)
+    schemas.computeIfAbsent(key, _ => {
+      val converter = new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = key._4, assumeInt96IsTimestamp = key._5,
+        caseSensitive = key._6, inferTimestampNTZ = key._7,
+        nanosAsLong = true, useFieldId = key._8,
+        ignoreVariantAnnotation = key._9,
+        respectUnknownTypeAnnotation = key._10)
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(st, hadoopConf),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(
+        new Footer(st.getPath, footer), converter)
+    })
+  }
+
+  /** `st` if it is a file, else the data files under it, skipping the
+    * names Spark's file index skips (`_SUCCESS`, `.crc`, …). */
+  private def dataFiles(fs: FileSystem, st: FileStatus)
+      : Iterator[FileStatus] =
+    if (st.isFile) Iterator.single(st)
+    else fs.listStatus(st.getPath).iterator.filterNot { f =>
+      val n = f.getPath.getName
+      n.startsWith(".") || n.startsWith("_") && !n.contains("=")
+    }.flatMap(dataFiles(fs, _))
 
   /** The timed harnesses' warm-up: JVM/codegen paths, then ONE un-timed
     * read-through of every base table (the noop sink decodes every

@@ -32,10 +32,10 @@ object TopicMatch {
     * the final complete level, `+` only as a complete level. */
   def validate(pattern: String): Unit = {
     require(pattern.nonEmpty, "empty topic filter")
-    val levels = split(pattern)
-    levels.zipWithIndex.foreach { case (l, i) =>
+    val ls = levels(pattern)
+    ls.zipWithIndex.foreach { case (l, i) =>
       if (l.contains("#"))
-        require(l == "#" && i == levels.length - 1,
+        require(l == "#" && i == ls.length - 1,
           s"'#' must be the final complete level: $pattern")
       if (l.contains("+"))
         require(l == "+", s"'+' must be a complete level: $pattern")
@@ -43,23 +43,27 @@ object TopicMatch {
   }
 
   /** Driver-side match — the routing decision itself. */
-  def matches(topic: String, pattern: String): Boolean = {
-    val t = split(topic)
-    val p = split(pattern)
-    if (p.lastOption.contains("#")) {
-      val k = p.length - 1
-      t.length >= k && (0 until k).forall(i => p(i) == "+" || p(i) == t(i))
+  def matches(topic: String, pattern: String): Boolean =
+    matches(levels(topic), levels(pattern))
+
+  /** [[matches]] on topic and filter already split by [[levels]]: a
+    * router splits each filter once at subscribe time and each topic
+    * once per message. */
+  def matches(topic: Array[String], filter: Array[String]): Boolean =
+    if (filter.nonEmpty && filter.last == "#") {
+      val k = filter.length - 1
+      topic.length >= k &&
+        (0 until k).forall(i => filter(i) == "+" || filter(i) == topic(i))
     } else
-      t.length == p.length &&
-        p.indices.forall(i => p(i) == "+" || p(i) == t(i))
-  }
+      topic.length == filter.length &&
+        filter.indices.forall(i => filter(i) == "+" || filter(i) == topic(i))
 
   /** Anchored regex equivalent — portable across Java regex (Spark
     * `rlike`) and RE2 (DuckDB `regexp_matches`): metacharacters in
     * literal levels are backslash-escaped individually (no `\Q…\E`,
     * which RE2 parses but some engines don't). */
   def toRegex(pattern: String): String = {
-    val p = split(pattern)
+    val p = levels(pattern)
     val (body, tail) =
       if (p.lastOption.contains("#"))
         (p.dropRight(1), "(/.*)?")
@@ -81,5 +85,6 @@ object TopicMatch {
     topicCol.rlike(toRegex(pattern))
   }
 
-  private def split(s: String): Array[String] = s.split("/", -1)
+  /** A topic or filter's `/`-separated levels, empty ones kept. */
+  def levels(s: String): Array[String] = s.split("/", -1)
 }

@@ -223,9 +223,16 @@ final class MqttBroker(port: Int = 0) {
   private final class Pending(val topic: String, val payload: Array[Byte],
       var deadlineNanos: Long, val retain: Boolean)
 
+  /** One granted subscription, its filter split into levels once. */
+  private final class Sub(val filter: String, val qos: Int) {
+    val levels: Array[String] = TopicMatch.levels(filter)
+  }
+
   private final class Conn(val sock: Socket)
       extends PacketWriter(sock.getOutputStream) {
-    val subs = TrieMap.empty[String, Int] // filter -> granted qos
+    // replaced, never mutated, by this connection's reader thread alone;
+    // other connections' readers route through whichever one they see
+    @volatile var subs = Vector.empty[Sub]
     val pending = new ConcurrentHashMap[Integer, Pending]()
     val nextId = new AtomicInteger(1)
   }
@@ -318,24 +325,25 @@ final class MqttBroker(port: Int = 0) {
               if ((h & 0x0f) != 2)
                 throw new IOException("SUBSCRIBE flags must be 0b0010")
               val pid = readPacketId(b, 0)
-              val granted = Seq.newBuilder[(String, Int)]
+              val granted = Vector.newBuilder[Sub]
               var off = 2
               while (off < b.length) {
                 val (filter, o) = readStr(b, off)
                 need(b, o + 1)
                 TopicMatch.validate(filter)
                 val q = math.min(b(o) & 0x03, 1) // QoS 2 not offered
-                c.subs(filter) = q
-                granted += ((filter, q))
+                val sub = new Sub(filter, q)
+                c.subs = c.subs.filterNot(_.filter == filter) :+ sub
+                granted += sub
                 off = o + 1
               }
               val fs = granted.result()
-              c.send(packet(SUBACK << 4, u16(pid) ++ fs.map(_._2.toByte)))
+              c.send(packet(SUBACK << 4, u16(pid) ++ fs.map(_.qos.toByte)))
               // retained delivery (spec §3.3.1.3): each retained topic
               // matching a just-granted filter goes out once, RETAIN=1,
               // at the highest qos this packet's filters grant it
               retained.readOnlySnapshot().foreach { case (t, (pl, rq)) =>
-                val g = grant(t, fs)
+                val g = grant(TopicMatch.levels(t), fs)
                 if (g >= 0) deliver(c, t, pl, math.min(rq, g), retain = true)
               }
             case UNSUBSCRIBE =>
@@ -343,7 +351,7 @@ final class MqttBroker(port: Int = 0) {
               var off = 2
               while (off < b.length) {
                 val (filter, o) = readStr(b, off)
-                c.subs.remove(filter)
+                c.subs = c.subs.filterNot(_.filter == filter)
                 off = o
               }
               c.send(packet(UNSUBACK << 4, u16(pid)))
@@ -380,10 +388,11 @@ final class MqttBroker(port: Int = 0) {
     finally dropConn(c)
   }
 
-  /** The highest qos `filters` grant `topic`, or -1 if none matches. */
-  private def grant(topic: String, filters: Iterable[(String, Int)]): Int =
-    filters.foldLeft(-1) { case (g, (f, q)) =>
-      if (TopicMatch.matches(topic, f)) math.max(g, q) else g
+  /** The highest qos `subs` grant the topic split into `levels`, or -1
+    * if none matches. */
+  private def grant(levels: Array[String], subs: Vector[Sub]): Int =
+    subs.foldLeft(-1) { (g, s) =>
+      if (TopicMatch.matches(levels, s.levels)) math.max(g, s.qos) else g
     }
 
   /** Fan a published message out to every subscribed connection ONCE,
@@ -391,12 +400,14 @@ final class MqttBroker(port: Int = 0) {
     * (spec §3.3.5 allows one delivery per connection for overlapping
     * subscriptions). */
   private def route(topic: String, payload: Array[Byte],
-      pubQos: Int): Unit =
+      pubQos: Int): Unit = {
+    val levels = TopicMatch.levels(topic)
     conns.forEach { c =>
-      val g = grant(topic, c.subs.readOnlySnapshot())
+      val g = grant(levels, c.subs)
       if (g >= 0) deliver(c, topic, payload, math.min(pubQos, g),
         retain = false)
     }
+  }
 
   /** Send one message to `c`, live or retained. At QoS 1 it joins the
     * connection's in-flight set and is retransmitted until PUBACK'd; a
@@ -430,8 +441,9 @@ final class MqttClient(host: String, port: Int,
   sock.setTcpNoDelay(true) // see MqttBroker's accept loop
   private val wire = new PacketWriter(sock.getOutputStream)
   private val in = sock.getInputStream
+  // (filter levels, callback)
   private val subs = new java.util.concurrent.CopyOnWriteArrayList[
-    (String, (String, Array[Byte]) => Unit)]
+    (Array[String], (String, Array[Byte]) => Unit)]
   // packet id -> what the reader runs when its SUBACK, UNSUBACK or
   // PUBACK arrives
   private val acks = new ConcurrentHashMap[Integer, Runnable]()
@@ -460,8 +472,9 @@ final class MqttClient(host: String, port: Int,
         (h >> 4) match {
           case PUBLISH =>
             val p = decodePublish(h, b)
+            val levels = TopicMatch.levels(p.topic)
             subs.forEach { case (filter, cb) =>
-              if (TopicMatch.matches(p.topic, filter)) cb(p.topic, p.payload)
+              if (TopicMatch.matches(levels, filter)) cb(p.topic, p.payload)
             }
             if (p.qos == 1)
               wire.send(packet(PUBACK << 4, u16(p.packetId)))
@@ -481,7 +494,7 @@ final class MqttClient(host: String, port: Int,
   def subscribe(filter: String, qos: Int = 1)
       (cb: (String, Array[Byte]) => Unit): Unit = {
     TopicMatch.validate(filter)
-    subs.add((filter, cb))
+    subs.add((TopicMatch.levels(filter), cb))
     val id = allocId(nextId, acks)
     val latch = new CountDownLatch(1)
     acks.put(Integer.valueOf(id), () => latch.countDown())
@@ -592,20 +605,21 @@ final class MqttClient(host: String, port: Int,
   * Exactly-once stays the checkpointed FILE sink's contract
   * ([[graft.streaming.EventPipelines.sink]]). */
 object MqttSink {
-  import org.apache.spark.sql.Encoders
   import org.apache.spark.sql.functions.{col, struct, to_json}
 
-  /** Publish one (batch) DataFrame — each row as one JSON message. */
+  /** Publish one (batch) DataFrame — each row as one JSON message. The
+    * payload column runs as the plan's own RDD: one RDD operation per
+    * call, with no deserializer or second closure cleaning on top. */
   def publishBatch(batch: DataFrame, host: String, port: Int,
       topic: String): Unit =
     batch.select(to_json(struct(col("*"))).cast("binary"))
-      .as(Encoders.BINARY)
-      .foreachPartition { (it: Iterator[Array[Byte]]) =>
-        if (it.hasNext) {
+      .queryExecution.toRdd.foreachPartition { rows =>
+        if (rows.hasNext) {
           val c = new MqttClient(host, port,
             s"graft-sink-${java.util.UUID.randomUUID().toString.take(8)}")
             .connect()
-          try c.publishAll(topic, it)
+          // getBinary copies the bytes out of the reused row
+          try c.publishAll(topic, rows.map(_.getBinary(0)))
           finally c.disconnect()
         }
       }
